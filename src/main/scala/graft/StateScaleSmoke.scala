@@ -240,11 +240,13 @@ object StateScaleSmoke {
     java.nio.file.Files.write(
       java.nio.file.Paths.get("smoke_restart.json"), json.getBytes("UTF-8"))
     require(stable, "restarted store content diverged from the reference run")
-    // Cardinality is proven from the STORE (exact), not numRowsTotal:
-    // RocksDB's row metric is the estimate-num-keys property, which
-    // counts pre-compaction VERSIONS — under this smoke's update-heavy
-    // keys (each key re-seen in 2 batches) it reads ~3x the true
-    // cardinality, unlike the append-only base smoke where it is exact.
+    // Cardinality is proven from the STORE (exact). numRowsTotal is
+    // exact too, revisited keys included, under RocksDB as under the
+    // in-heap provider (UpsertSinkSpec's one-evaluation-per-trigger
+    // cases): the ~3x it read in the committed smoke_restart.json came
+    // from the upsert sink re-running the fold for every action on its
+    // unpersisted foreachBatch frame — each run adds its state rows to
+    // the trigger's metric — not from RocksDB counting old versions.
     require(na == distinctKeys,
       s"store cardinality after restart: $na != $distinctKeys")
     spark.stop()

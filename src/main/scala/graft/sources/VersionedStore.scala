@@ -1163,9 +1163,20 @@ object VersionedStore extends QueryPack {
     * schema-carrier footer read, on planning paths that read manifests
     * anyway. */
   private[graft] def requireKeyClassMatch(s: SparkSession, path: String,
-      v: Int, keys: DataFrame, keyCol: String): Unit = {
+      v: Int, keys: DataFrame, keyCol: String): Unit =
+    requireKeyType(schemaCarrier(s, path, v).schema(keyCol).dataType,
+      keys, keyCol)
+
+  /** [[requireKeyClassMatch]] typed off `file`, a member file of the
+    * version the caller already holds from its manifest — the same
+    * check without a second manifest read. */
+  private[graft] def requireKeyClassMatch(s: SparkSession, file: String,
+      keys: DataFrame, keyCol: String): Unit =
+    requireKeyType(s.read.parquet(file).schema(keyCol).dataType, keys, keyCol)
+
+  private def requireKeyType(storeDt: org.apache.spark.sql.types.DataType,
+      keys: DataFrame, keyCol: String): Unit = {
     import org.apache.spark.sql.types._
-    val storeDt = schemaCarrier(s, path, v).schema(keyCol).dataType
     val batchDt = keys.schema(keyCol).dataType
     def integral(dt: DataType) = dt == LongType || dt == IntegerType ||
       dt == ShortType || dt == ByteType
@@ -1356,18 +1367,25 @@ object VersionedStore extends QueryPack {
 
   /** Persist one commit's change rows SIZED from their count (the
     * [[deleteCommitDv]] ceil rule — a small feed lands in one file, one
-    * nearing file scale splits instead of a single monolithic task). */
+    * nearing file scale splits instead of a single monolithic task).
+    * A committer that can bound the row count up front passes
+    * `rowBound` and the rows are evaluated once, by the write; without
+    * it they are persisted and counted first. */
   private[graft] def writeCdc(s: SparkSession, path: String, v: Int,
-      rows: DataFrame, keyCol: String, targetFileBytes: Long = 64L << 20)
-      : Unit = {
-    val r = rows.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val n = r.count()
+      rows: DataFrame, keyCol: String, targetFileBytes: Long = 64L << 20,
+      rowBound: Option[Long] = None): Unit = {
+    def write(df: DataFrame, n: Long): Unit = {
       val nf = math.max(1L,
         (n * CdcBytesPerRow + targetFileBytes - 1) / targetFileBytes).toInt
-      r.repartitionByRange(nf, col(keyCol)).sortWithinPartitions(keyCol)
+      df.repartitionByRange(nf, col(keyCol)).sortWithinPartitions(keyCol)
         .write.mode(SaveMode.Overwrite).parquet(cdcPath(path, v))
-    } finally r.unpersist(false)
+    }
+    rowBound match {
+      case Some(n) => write(rows, n)
+      case None =>
+        val r = rows.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try write(r, r.count()) finally r.unpersist(false)
+    }
   }
 
   /** READ-ONLY twin of [[fileKeyStatsBloomed]] for read-path planners
@@ -1406,7 +1424,7 @@ object VersionedStore extends QueryPack {
       keyCol: String): DataFrame = {
     val files = versionFiles(s, path, v)
     requireSupportedKey(keys, keyCol)
-    if (files.nonEmpty) requireKeyClassMatch(s, path, v, keys, keyCol)
+    if (files.nonEmpty) requireKeyClassMatch(s, files.head, keys, keyCol)
     val owning: Seq[String] =
       if (files.isEmpty) Nil // a purge can empty a committed manifest
       else fileKeyStatsReadOnly(s, path, v) match {

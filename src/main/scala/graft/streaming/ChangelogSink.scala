@@ -70,18 +70,22 @@ object ChangelogSink {
 
   /** Upsert sink + change feed: every batch first writes its changelog
     * (Overwrite into the batch's own dir — replay-idempotent), then
-    * merges into the store via [[UpsertSink.mergeBatch]]. */
+    * merges into the store via [[UpsertSink.mergeBatch]]. The batch is
+    * persisted across both, so the entity fold upstream of it runs once
+    * per trigger, not once for the changelog and again for the merge. */
   def writeTo(updates: Dataset[EntityUpdate], storeDir: String,
       changelogDir: String, checkpointDir: String): StreamingQuery =
     updates.writeStream
       .outputMode(OutputMode.Update())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[EntityUpdate], batchId: Long) =>
-        classify(batch, storeDir)
-          .coalesce(1)
-          .write.mode(SaveMode.Overwrite)
-          .parquet(s"$changelogDir/batch_$batchId")
-        UpsertSink.mergeBatch(batch, storeDir, batchId); ()
+        UpsertSink.persisted(batch) { b =>
+          classify(b, storeDir)
+            .coalesce(1)
+            .write.mode(SaveMode.Overwrite)
+            .parquet(s"$changelogDir/batch_$batchId")
+          UpsertSink.mergeBatch(b, storeDir, batchId)
+        }; ()
       }
       .start()
 }

@@ -6,6 +6,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQuery}
+import org.apache.spark.storage.StorageLevel
 
 /** Keyed upsert sink: the store side of ingest→process→store.
   *
@@ -25,6 +26,21 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQu
   * files — never the store. Superseded files stay referenced by older
   * manifests (time travel through [[VersionedStore.readVersion]]) until
   * [[VersionedStore.vacuum]] reclaims them.
+  *
+  * ONE EVALUATION PER BATCH: a `foreachBatch` frame re-runs its whole
+  * upstream — the entity fold and its state commit included — for every
+  * action taken on it, and a commit takes about six (emptiness and key
+  * band, owning files, rewrite, CDC diff and its sizing). So
+  * [[upsertBatch]] persists the batch and its distinct keys at entry and
+  * releases both on every exit (commit, replay skip, empty batch, lost
+  * race, exception); emptiness, key band and key count come from one
+  * aggregate over the persisted keys, and the CDC write is sized from
+  * that count instead of counting the diff. What remains per trigger
+  * is the fold once, then mostly small metadata jobs: the txn-tip and
+  * parent-manifest reads, a key-type check on one parent file's
+  * footer, the owning-file join, the rewrite of the touched files, the
+  * read-back of the new files' key bands, and the manifest, CDC and
+  * txn writes.
   */
 /** The upsert manifest row: member file + its key band. The extra
   * stats columns ride alongside [[VersionedStore]]'s `file` column, so
@@ -126,7 +142,7 @@ object UpsertSink {
     // the store): no prior rows, same contract as no-store-yet —
     // read.parquet over an empty path list would throw instead
     if (parent.isEmpty) return None
-    VersionedStore.requireKeyClassMatch(s, path, vs.max, keys, keyCol)
+    VersionedStore.requireKeyClassMatch(s, parent.head.file, keys, keyCol)
     val owning = owningFiles(keys, parent, keyCol)
     val files = if (owning.nonEmpty) owning
       else parent.map(_.file).take(1) // schema carrier, filtered empty
@@ -166,8 +182,46 @@ object UpsertSink {
       batchId: Long, keyCol: String, initialPartitions: Int,
       settleTimeoutMs: Long, dropKeys: Option[DataFrame],
       operation: String): Option[Int] = {
-    if (batch.isEmpty && dropKeys.forall(_.isEmpty)) return None
     requireSupportedKey(batch, keyCol)
+    persisted(batch) { b =>
+      val keys = dropKeys
+        .map(dk => b.select(col(keyCol)).unionByName(dk.select(col(keyCol))))
+        .getOrElse(b.select(col(keyCol)))
+        .distinct()
+      persisted(keys) { allKeys =>
+        // emptiness, the key band (the disjoint-conflict fast path's
+        // overlap probe) and the key count (the CDC sizing bound) in one
+        // aggregate over the persisted keys
+        val r = allKeys.agg(count(lit(1)),
+          min(VersionedStore.keyLong(allKeys, keyCol)),
+          max(VersionedStore.keyLong(allKeys, keyCol))).head()
+        if (r.getLong(0) == 0L) None
+        else commit(b, allKeys, path, batchId, keyCol, initialPartitions,
+          settleTimeoutMs, operation, BatchKeys(r.getLong(1), r.getLong(2),
+            r.getLong(0)))
+      }
+    }
+  }
+
+  /** The batch's distinct keys in long space: band and count. */
+  private case class BatchKeys(lo: Long, hi: Long, count: Long)
+
+  /** Run `f` over `ds` persisted, unpersisting it on every exit (return
+    * or exception) — the one-evaluation rule above, for any sink that
+    * acts on its `foreachBatch` frame more than once. A frame the
+    * caller already cached is left exactly as the caller had it. */
+  private[streaming] def persisted[T, A](ds: Dataset[T])(f: Dataset[T] => A): A = {
+    val own = ds.storageLevel == StorageLevel.NONE
+    if (own) ds.persist(StorageLevel.MEMORY_AND_DISK)
+    try f(ds) finally if (own) ds.unpersist(blocking = false)
+  }
+
+  /** The claim → settle → commit loop of [[upsertBatch]], over the
+    * persisted non-empty batch and its persisted distinct keys
+    * (`allKeys`: batch ∪ drop keys). */
+  private def commit(batch: DataFrame, allKeys: DataFrame, path: String,
+      batchId: Long, keyCol: String, initialPartitions: Int,
+      settleTimeoutMs: Long, operation: String, keys: BatchKeys): Option[Int] = {
     val s = batch.sparkSession
     // marker-gate commit detection from store birth (the appendCommit
     // race guard): this committer writes txn records, so the txn dir
@@ -175,16 +229,6 @@ object UpsertSink {
     new Path(VersionedCommitSink.txnDir(path))
       .getFileSystem(s.sparkContext.hadoopConfiguration)
       .mkdirs(new Path(VersionedCommitSink.txnDir(path)))
-    val allKeys = dropKeys
-      .map(dk => batch.select(col(keyCol)).unionByName(dk.select(col(keyCol))))
-      .getOrElse(batch.select(col(keyCol)))
-      .distinct()
-    // the batch's key band in long space — the disjoint-conflict fast
-    // path's overlap probe (one tiny aggregate, paid once per batch)
-    val keyBoundsRow = allKeys.agg(
-      min(VersionedStore.keyLong(allKeys, keyCol)).as("lo"),
-      max(VersionedStore.keyLong(allKeys, keyCol)).as("hi")).head()
-    val (keyLo, keyHi) = (keyBoundsRow.getLong(0), keyBoundsRow.getLong(1))
     // lineage check: upserts resolve their parent through txn markers,
     // so a store carrying manifest-only (batch-built) versions above
     // the txn tip would make every settle disagree with `latest`
@@ -218,7 +262,7 @@ object UpsertSink {
       val parent: Array[FileStats] = latest
         .map(pv => statsManifest(s, path, pv, keyCol)).getOrElse(Array.empty)
       if (parent.nonEmpty)
-        VersionedStore.requireKeyClassMatch(s, path, latest.get, batch, keyCol)
+        VersionedStore.requireKeyClassMatch(s, parent.head.file, batch, keyCol)
       val owning: Array[String] = owningFiles(allKeys, parent, keyCol)
 
       // Rewrite = touched files' survivors + the batch (keyed replace:
@@ -264,7 +308,7 @@ object UpsertSink {
           val latestSet = parent.map(_.file).toSet
           val ownSurvived = owning.forall(sSet.contains)
           val addedOverlap = sParent.exists(f =>
-            !latestSet(f.file) && !(f.mx < keyLo || f.mn > keyHi))
+            !latestSet(f.file) && !(f.mx < keys.lo || f.mn > keys.hi))
           if (ownSurvived && !addedOverlap) Some(sParent) else None
         }
       if (commitParent.isDefined) {
@@ -307,7 +351,11 @@ object UpsertSink {
               preRaw.join(broadcast(dv), dv.columns.toSeq, "left_anti"))
             graft.sources.ChangeFeed.keyedDiff(pre, batch.toDF(), keyCol)
           }
-        VersionedStore.writeCdc(s, path, v, cdcRows, keyCol)
+        // at most 2 change rows (an update's pre- and post-image) per
+        // distinct key: a file-count bound, so the diff runs only once,
+        // in the write itself
+        VersionedStore.writeCdc(s, path, v, cdcRows, keyCol,
+          rowBound = Some(2 * keys.count))
         // key-based dv RESURRECTION: a keyed write of key K supersedes
         // K's pending deletion — shrink the cumulative vector at this
         // slot, or the re-onboarded subject's new row stays invisible

@@ -213,13 +213,15 @@ object VersionedCommitSink {
     Some(v)
   }
 
-  /** Maintain the versioned table from a stream. */
+  /** Maintain the versioned table from a stream. Each batch is
+    * persisted across [[appendBatch]]'s emptiness check and its write,
+    * so its upstream plan runs once per trigger. */
   def writeTo(rows: DataFrame, path: String,
       checkpointDir: String): StreamingQuery =
     rows.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        appendBatch(batch, path, batchId); ()
+        UpsertSink.persisted(batch)(appendBatch(_, path, batchId)); ()
       }
       .start()
 }

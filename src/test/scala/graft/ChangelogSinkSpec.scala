@@ -57,4 +57,29 @@ class ChangelogSinkSpec extends AnyFunSuite {
       assert(after == Map(1L -> (2L, 16.0), 2L -> (1L, 3.0), 3L -> (1L, 1.0)))
     } finally q.stop()
   }
+
+  test("changelog and merge share one evaluation of the entity fold per trigger") {
+    // classify and merge both act on the foreachBatch frame; each action
+    // on an unpersisted frame re-runs the fold and adds its state rows
+    // to the trigger's metrics again
+    implicit val sqlCtx = spark.sqlContext
+    val base = Files.createTempDirectory("graft_cdc_once_").toString
+    val (store, cdc, ckpt) = (s"$base/entities", s"$base/cdc", s"$base/ckpt")
+    val in = MemoryStream[OrderEvent]
+    val q = ChangelogSink.writeTo(Streams.entityStream(in.toDS()), store, cdc, ckpt)
+    try {
+      Seq(0 until 100, 50 until 150).foreach { keys =>
+        val before = spark.sparkContext.getPersistentRDDs.size
+        in.addData(keys.map(k => OrderEvent(k.toLong, 2.0, "O")): _*)
+        q.processAllAvailable()
+        assert(spark.sparkContext.getPersistentRDDs.size == before,
+          "a trigger left RDDs persisted")
+        val storeKeys = graft.streaming.UpsertSink.readStore(spark, store)
+          .select("custkey").distinct().count()
+        assert(q.lastProgress.stateOperators.head.numRowsTotal == storeKeys,
+          s"state rows ${q.lastProgress.stateOperators.head.numRowsTotal} " +
+            s"!= store keys $storeKeys")
+      }
+    } finally q.stop()
+  }
 }

@@ -5,6 +5,7 @@ import graft.streaming.Streams.OrderEvent
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 class UpsertSinkSpec extends AnyFunSuite {
   import TestSpark.spark
@@ -167,6 +168,67 @@ class UpsertSinkSpec extends AnyFunSuite {
     }
     assert(err.getMessage.contains("unsupported store key type"),
       err.getMessage)
+  }
+
+  /** One evaluation per trigger: the sink acts on its `foreachBatch`
+    * frame several times (emptiness and key band, owning files, the
+    * rewrite, the change diff), and every action on an unpersisted
+    * frame re-runs the entity fold upstream of it, adding that fold's
+    * state rows to the trigger's metrics again. Evaluated once,
+    * `numRowsTotal` equals the store's distinct keys exactly, revisited
+    * keys included, and the persisted frames are released on every
+    * exit: commit, replayed batch id and empty batch. */
+  private def oneEvaluationPerTrigger(rocksDb: Boolean): Unit = {
+    import graft.streaming.Streams.EntityUpdate
+    val s = spark.newSession()
+    if (rocksDb) s.conf.set("spark.sql.streaming.stateStore.providerClass",
+      Engine.RocksDbStateStoreProvider)
+    implicit val sqlCtx = s.sqlContext
+    val base = Files.createTempDirectory("graft_once_").toString
+    val store = s"$base/entities"
+    def persistedRdds = s.sparkContext.getPersistentRDDs.size
+    def storeKeys = UpsertSink.readStore(s, store)
+      .select("custkey").distinct().count()
+    val in = MemoryStream[OrderEvent]
+    val q = UpsertSink.writeTo(Streams.entityStream(in.toDS()), store,
+      s"$base/ckpt")
+    try {
+      // three triggers, the second and third revisiting earlier keys
+      Seq(0 until 200, 100 until 300, 0 until 400 by 3).zipWithIndex
+        .foreach { case (keys, t) =>
+          val before = persistedRdds
+          in.addData(keys.map(k => OrderEvent(k.toLong, 1.0 + t,
+            if (k % 2 == 0) "O" else "F")): _*)
+          q.processAllAvailable()
+          assert(persistedRdds == before,
+            s"trigger $t left ${persistedRdds - before} RDDs persisted")
+          val sop = q.lastProgress.stateOperators.head
+          assert(sop.numRowsTotal == storeKeys,
+            s"trigger $t: state rows ${sop.numRowsTotal} != store keys " +
+              s"$storeKeys — the entity fold ran more than once")
+          if (rocksDb) assert(sop.customMetrics.keySet.asScala
+            .exists(_.toLowerCase.contains("rocksdb")), "provider not RocksDB")
+        }
+    } finally q.stop()
+    assert(storeKeys == 334L) // [0, 300) plus the multiples of 3 in [300, 400)
+
+    val lastBatch = q.lastProgress.batchId
+    val before = persistedRdds
+    val replay = Seq(EntityUpdate(1L, "Modified", 9L, 9.0, 9.0, 0L, 9L)).toDS()
+    assert(UpsertSink.mergeBatch(replay, store, lastBatch).isEmpty,
+      "replayed batch id was not skipped")
+    assert(persistedRdds == before, "a replayed batch left RDDs persisted")
+    assert(UpsertSink.mergeBatch(s.emptyDataset[EntityUpdate], store,
+      lastBatch + 1).isEmpty, "an empty batch committed")
+    assert(persistedRdds == before, "an empty batch left RDDs persisted")
+  }
+
+  test("each trigger evaluates the entity fold once (in-heap state)") {
+    oneEvaluationPerTrigger(rocksDb = false)
+  }
+
+  test("each trigger evaluates the entity fold once (RocksDB state)") {
+    oneEvaluationPerTrigger(rocksDb = true)
   }
 
   test("search-doc sink resumes batch numbering after a checkpoint restart") {

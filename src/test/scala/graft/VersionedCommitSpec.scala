@@ -313,4 +313,29 @@ class VersionedCommitSpec extends AnyFunSuite {
     // adjacent slots have no gap to probe
     VersionedStore.requireNoLineageGap(spark, path, parent = 1, v = 2)
   }
+
+  test("each appended micro-batch is evaluated once") {
+    // appendBatch checks emptiness and then writes: two actions, and an
+    // unpersisted foreachBatch frame re-runs its upstream for each
+    implicit val sqlCtx = spark.sqlContext
+    val base = Files.createTempDirectory("graft_vcs_once_").toString
+    val (path, ckpt) = (s"$base/store", s"$base/ckpt")
+    val evaluated = spark.sparkContext.longAccumulator("vcs_rows_evaluated")
+    val in = MemoryStream[VcsReading]
+    val q = VersionedCommitSink.writeTo(
+      in.toDS().map { r => evaluated.add(1); r }.toDF(), path, ckpt)
+    try {
+      Seq(1L to 100L, 101L to 150L).foreach { keys =>
+        val (rows, persisted) =
+          (evaluated.value, spark.sparkContext.getPersistentRDDs.size)
+        in.addData(keys.map(k => VcsReading(k, k)): _*)
+        q.processAllAvailable()
+        assert(evaluated.value - rows == keys.size,
+          s"${evaluated.value - rows} row evaluations for ${keys.size} rows")
+        assert(spark.sparkContext.getPersistentRDDs.size == persisted,
+          "a trigger left RDDs persisted")
+      }
+    } finally q.stop()
+    assert(VersionedCommitSink.committedVersions(spark, path) == Seq(1, 2))
+  }
 }
