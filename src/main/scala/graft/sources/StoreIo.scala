@@ -25,10 +25,14 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * Ops built on its store's conditional-put API (S3 If-None-Match,
   * GCS preconditions) or an external catalog/lock service — the same
   * split Delta makes with its LogStore plugin — WITHOUT touching any
-  * committer: every committer calls [[StoreIo.ops]]. The contract each
+  * committer: every versioned committer reaches the seam through
+  * [[TxnLog]] (slot claims, commit and abandon markers, checkpoint
+  * renames), and the remaining side-relation swaps (segment merges,
+  * stats gc, tags) call [[StoreIo.ops]] directly. The contract each
   * replacement must honor is this file's three clauses; the spec
-  * drives the committers through a recording and a conditional-put
-  * simulation to pin that the seam is the only path.
+  * drives the committers through a recording, a conditional-put
+  * simulation and an injected crash at every call to pin that the seam
+  * is the only path and that every crash point recovers.
   */
 object StoreIo {
 

@@ -315,12 +315,7 @@ object StoreLineage extends QueryPack {
       try out.write(s"$srcPath\n$srcV\n".getBytes("UTF-8"))
       finally out.close()
     }
-    import s.implicits._
-    Seq((-1L, System.currentTimeMillis(), "clone"))
-      .toDF("batch_id", "commit_ts", "operation")
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(txnPath(dstPath, 1))
-    StoreIo.ops.createMarker(fs, new org.apache.hadoop.fs.Path(
-      s"${txnPath(dstPath, 1)}/batch_-1.marker")) // marker LAST = the commit
+    TxnLog.writeRecord(s, dstPath, 1, -1L, "clone") // marker LAST = the commit
     1
   }
 

@@ -325,13 +325,7 @@ object VersionedStore extends QueryPack {
       .map(_.getPath.getName)
       .collect { case n if n.startsWith("v") => n.drop(1).toIntOption }
       .flatten.sorted.reverse
-      .find { v =>
-        val d = new org.apache.hadoop.fs.Path(txnPath(path, v))
-        fs.exists(d) && fs.listStatus(d).exists { st =>
-          val n = st.getPath.getName
-          n.startsWith("batch_") && n.endsWith(".marker")
-        }
-      }
+      .find(TxnLog.isCommitted(fs, path, _))
   }
 
   /** The committed tip regardless of store flavor: marker-gated for
@@ -378,8 +372,8 @@ object VersionedStore extends QueryPack {
   }
 
   /** Mark a claimed-but-never-committed slot as ABANDONED — one atomic
-    * marker create beside the claim. A loser that re-plans (the COW
-    * burn-and-loop) marks its burned slot so concurrent settlers skip
+    * marker create beside the claim. A loser that re-plans
+    * ([[TxnLog.commit]]) marks its burned slot so concurrent settlers skip
     * it immediately instead of waiting out their timeout; the slot
     * number stays claimed (never reused), and vacuum reclaims the
     * marker with the claim. Abandon-then-commit cannot happen: only
@@ -411,17 +405,11 @@ object VersionedStore extends QueryPack {
       lo: Int, hi: Int): Seq[Int] = {
     val fs = new org.apache.hadoop.fs.Path(txnDir(path))
       .getFileSystem(s.sparkContext.hadoopConfiguration)
-    ((lo + 1) until hi).filter { v =>
-      val d = new org.apache.hadoop.fs.Path(txnPath(path, v))
-      fs.exists(d) && fs.listStatus(d).exists { st =>
-        val n = st.getPath.getName
-        n.startsWith("batch_") && n.endsWith(".marker")
-      }
-    }
+    ((lo + 1) until hi).filter(TxnLog.isCommitted(fs, path, _))
   }
 
-  /** The settle-timeout lineage detector (round-13 advice, shared by
-    * the streaming sinks and the batch appender): called AFTER a commit
+  /** The settle-timeout lineage detector (round-13 advice, the last
+    * step of [[TxnLog.commit]]): called AFTER a commit
     * wrote its marker, with the parent tip the commit carried forward.
     * A slow lower-slot writer that outlived settleBelow's timeout and
     * then committed has its rows missing from this commit's lineage
@@ -498,21 +486,16 @@ object VersionedStore extends QueryPack {
   private def readTxnMeta(s: SparkSession, path: String, v: Int): (Long, Long) = {
     val fs = new org.apache.hadoop.fs.Path(txnDir(path))
       .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val sts = fs.listStatus(new org.apache.hadoop.fs.Path(txnPath(path, v)))
-    val markers = sts.filter { st =>
-      val n = st.getPath.getName
-      n.startsWith("batch_") && n.endsWith(".marker")
-    }
-    val bid = markers.map(_.getPath.getName
-      .stripPrefix("batch_").stripSuffix(".marker").toLong).max
+    val markers = TxnLog.markers(fs, path, v)
+    val bid = markers.map(_._1).max
     val recs = hadoopLs(s, txnPath(path, v))
     val ts =
-      if (recs.isEmpty) markers.map(_.getModificationTime).max
+      if (recs.isEmpty) markers.map(_._2.getModificationTime).max
       else {
         val df = s.read.parquet(recs.toIndexedSeq: _*)
         if (df.columns.contains("commit_ts"))
           df.select(max(col("commit_ts"))).head().getLong(0)
-        else markers.map(_.getModificationTime).max
+        else markers.map(_._2.getModificationTime).max
       }
     (bid, ts)
   }
@@ -557,12 +540,7 @@ object VersionedStore extends QueryPack {
       .map(_.getPath.getName)
       .collect { case n if n.startsWith("v") => n.drop(1).toIntOption }
       .flatten
-      .filter(v => ckptSet(v) ||
-        fs.listStatus(new org.apache.hadoop.fs.Path(txnPath(path, v)))
-          .exists { st =>
-            val n = st.getPath.getName
-            n.startsWith("batch_") && n.endsWith(".marker")
-          })
+      .filter(v => ckptSet(v) || TxnLog.isCommitted(fs, path, v))
       .sorted
   }
 
@@ -790,7 +768,7 @@ object VersionedStore extends QueryPack {
     // live commit never does (size the grace above the slowest commit
     // wall, the settle-timeout sizing rule). Sub-tip uncommitted claims
     // are settled history: claimers probe from tip+1, so the slot can
-    // never be re-contested, and the burn-and-loop protocol already
+    // never be re-contested, and the commit loop (TxnLog) already
     // classified their writer as abandoned when the tip passed them.
     val now = nowMs()
     claims.filterNot(committed.contains)
@@ -1047,14 +1025,14 @@ object VersionedStore extends QueryPack {
     * `-(new version)` — negative, so it can never collide with a
     * stream batch id — keeping the marker-commit rule uniform.
     *
-    * CONCURRENCY (round-13 verdict #5): the version slot is claimed
-    * atomically and the commit follows the UpsertSink burn-and-loop
-    * pattern — a data commit landing mid-compaction abandons this
-    * attempt's slot (vacuum reclaims the staging) and the WHOLE rewrite
-    * retries against the new tip, bounded attempts, correctness over
-    * wasted work. A claimed-but-crashed lower slot resolves through the
-    * settle timeout (the abandoned-claimer rule), so an orphaned claim
-    * no longer bricks maintenance. The maintenance LEASE still
+    * CONCURRENCY (round-13 verdict #5): the commit runs the
+    * [[TxnLog.commit]] loop — a data commit landing mid-compaction
+    * declines the publish, abandons this attempt's slot (vacuum
+    * reclaims the staging) and the WHOLE rewrite re-plans against the
+    * new tip, bounded attempts, correctness over wasted work. A
+    * claimed-but-crashed lower slot resolves through the settle timeout
+    * (the abandoned-claimer rule), so an orphaned claim no longer
+    * bricks maintenance. The maintenance LEASE still
     * serializes compaction against vacuum/delete commits; an erasure
     * SLA on a hot store sizes `settleTimeoutMs` above the stream's
     * commit wall.
@@ -1065,60 +1043,39 @@ object VersionedStore extends QueryPack {
     WriterLease.withLease(s, path, "compactCommit") {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
-    var attempts = 0
-    var abandoned = Set.empty[Int]
-    var done: Option[Int] = None
-    while (done.isEmpty && attempts < 3) {
-      attempts += 1
-      val vs = versions(s, path)
-      require(vs.nonEmpty, s"no committed versions under $path")
-      val cur = vs.last
-      val v = claimVersion(s, path, cur + 1)
-      // pre-settle: winning a slot above cur+1 means writers are (or
-      // recently were) in flight — resolve them BEFORE paying the
-      // rewrite; a crashed claimer times out into the abandoned rule
-      val pre = if (v == cur + 1) Some(cur)
-        else settleBelow(s, path, v, abandoned, settleTimeoutMs)
-      if (pre.contains(cur)) {
-        val files = versionFiles(s, path, cur)
-        val bytes = files.map(f =>
-          fs.getFileStatus(new org.apache.hadoop.fs.Path(f)).getLen).sum
-        val n = math.max(1L,
-          (bytes + targetFileBytes - 1) / targetFileBytes).toInt
+    TxnLog.commit(s, path, "optimize", settleTimeoutMs = settleTimeoutMs) { tip =>
+      require(tip.nonEmpty, s"no committed versions under $path")
+      val cur = tip.get
+      val files = versionFiles(s, path, cur)
+      val bytes = files.map(f =>
+        fs.getFileStatus(new org.apache.hadoop.fs.Path(f)).getLen).sum
+      val n = math.max(1L,
+        (bytes + targetFileBytes - 1) / targetFileBytes).toInt
+      // compaction is the dv FOLD point: the rewrite drops the
+      // deletion vector's rows from the data, so the compacted version
+      // commits an EMPTY dv to supersede the lineage (deleteCommitDv's
+      // design) — reads of v and later stop paying the anti-join
+      val dv = dvAt(s, path, cur)
+      Some { v =>
         val outDir = dataPath(path) + s"/compact_v$v"
-        // compaction is the dv FOLD point: the rewrite drops the
-        // deletion vector's rows from the data, so the compacted version
-        // commits an EMPTY dv to supersede the lineage (deleteCommitDv's
-        // design) — reads of v and later stop paying the anti-join
-        val dv = dvAt(s, path, cur)
         val folded = dv.fold(s.read.parquet(files: _*))(d =>
           s.read.parquet(files: _*).join(d, d.columns.toSeq, "left_anti"))
         folded
           .repartitionByRange(n, col(clusterCol))
           .sortWithinPartitions(clusterCol)
           .write.mode(SaveMode.Overwrite).parquet(outDir)
-        // commit validity: the rewrite is a correct next version only if
-        // the tip is STILL the one it compacted
-        val settled = settleBelow(s, path, v, abandoned, settleTimeoutMs)
-        if (settled.contains(cur)) {
+        // commit validity: the rewrite is a correct next version only
+        // if the tip is STILL the one it compacted
+        settled => settled == tip && {
           val outFiles = hadoopLs(s, outDir)
           writeManifest(s, path, v, outFiles)
           ColStats.onCommit(s, path, outFiles.toSeq.sorted)
           dv.foreach(d => d.limit(0).coalesce(1)
             .write.mode(SaveMode.Overwrite).parquet(dvPath(path, v)))
-          // a stream-built store commits through its txn-marker rule;
-          // the pseudo id is negative so replay checks never match
-          writeMaintenanceTxn(s, path, v, "optimize")
-          requireNoLineageGap(s, path, cur, v)
-          done = Some(v)
+          true
         }
       }
-      if (done.isEmpty) { abandoned += v; abandonSlot(s, path, v) } // tip moved: re-plan
-    }
-    done.getOrElse(throw new IllegalStateException(
-      s"compactCommit on $path lost the commit race 3 times — a writer " +
-        "is committing continuously; quiesce the stream or re-run from " +
-        "the maintenance schedule"))
+    }.committed.get
   }
 
   /** The band/bloom machinery compares keys in LONG space. Integral
@@ -1452,11 +1409,10 @@ object VersionedStore extends QueryPack {
     *    that own those key ranges, never the store;
     *  - the REWRITE is one anti-join of the owning files' rows against
     *    the key list, range-reclustered into at most `owning` files;
-    *  - the COMMIT claims its slot atomically ([[claimVersion]]) and,
-    *    racing a live data commit, abandons the slot and RETRIES the
-    *    plan+rewrite against the new tip (the UpsertSink burn-and-loop,
-    *    round-13 verdict #5 — an erasure SLA on a hot store must land
-    *    without quiescing the stream), bounded attempts; on a
+    *  - the COMMIT runs the [[TxnLog.commit]] loop: racing a live data
+    *    commit, it abandons the slot and RETRIES the plan+rewrite
+    *    against the new tip (round-13 verdict #5 — an erasure SLA on a
+    *    hot store must land without quiescing the stream); on a
     *    stream-built store it writes the negative-pseudo-id txn record
     *    so replay checks stay uniform, and the manifest keeps the
     *    parent's stats columns when present (shared rows keep their
@@ -1481,14 +1437,9 @@ object VersionedStore extends QueryPack {
       keyCol: String, settleTimeoutMs: Long = 30000L): Int =
     WriterLease.withLease(s, path, "deleteCommit") {
     requireSupportedKey(keys, keyCol)
-    var attempts = 0
-    var abandoned = Set.empty[Int]
-    var done: Option[Int] = None
-    while (done.isEmpty && attempts < 5) {
-      attempts += 1
-      val vs = versions(s, path)
-      require(vs.nonEmpty, s"no committed versions under $path")
-      val cur = vs.last
+    TxnLog.commit(s, path, "delete", settleTimeoutMs = settleTimeoutMs) { tip =>
+      require(tip.nonEmpty, s"no committed versions under $path")
+      val cur = tip.get
       requireKeyClassMatch(s, path, cur, keys, keyCol)
       // planning stats with per-file blooms (heals the manifest if they
       // are missing — one bounded scan, then k-row reads forever after)
@@ -1514,10 +1465,8 @@ object VersionedStore extends QueryPack {
         dvAt(s, path, cur).fold(inFiles)(dv =>
           inFiles.join(broadcast(dv), dv.columns.toSeq, "left_anti"))
       }
-      val hit = owning.nonEmpty && presentRows.limit(1).count() > 0
-      if (!hit) done = Some(cur) // no purged key present: no-op
-      else {
-        val v = claimVersion(s, path, cur + 1)
+      if (owning.isEmpty || presentRows.limit(1).count() == 0) None
+      else Some { v =>
         val outDir = dataPath(path) + s"/delete_v$v"
         s.read.parquet(owning.toIndexedSeq: _*)
           .join(keys.select(col(keyCol)).distinct(), Seq(keyCol), "left_anti")
@@ -1529,14 +1478,11 @@ object VersionedStore extends QueryPack {
         // feed; sized write, orphans reclaimed with the claim
         writeCdc(s, path, v,
           presentRows.withColumn("_change_type", lit("delete")), keyCol)
-        // commit validity (the UpsertSink burn-and-loop, round-13
-        // verdict #5): the rewrite is correct only against the tip it
-        // planned from — a data commit landing meanwhile abandons this
-        // slot (vacuum reclaims the staging) and the erasure re-plans
-        // against the new tip instead of demanding a quiesced stream
-        val settled = settleBelow(s, path, v, abandoned, settleTimeoutMs)
-        if (!settled.contains(cur)) { abandoned += v; abandonSlot(s, path, v) }
-        else {
+        // commit validity: the rewrite is correct only against the tip
+        // it planned from — a data commit landing meanwhile declines,
+        // and the erasure re-plans against the new tip instead of
+        // demanding a quiesced stream
+        settled => settled == tip && {
           val newFiles = hadoopLs(s, outDir)
           val ownSet = owning.toSet
           val sharedStats = stats.filterNot(t => ownSet(t._1))
@@ -1560,36 +1506,10 @@ object VersionedStore extends QueryPack {
             .toSeq.toDF("file", "mn", "mx")
             .coalesce(1).write.mode(SaveMode.Overwrite)
             .parquet(manifestPath(path, v))
-          writeMaintenanceTxn(s, path, v, "delete")
-          requireNoLineageGap(s, path, cur, v)
-          done = Some(v)
+          true
         }
       }
-    }
-    done.getOrElse(throw new IllegalStateException(
-      s"deleteCommit on $path lost the commit race 5 times — a writer is " +
-        "committing continuously; back off and retry"))
-  }
-
-  /** Maintenance-commit txn record — the negative pseudo batch id +
-    * marker a stream-built store's commit rule requires (compaction,
-    * delete commits); a no-op on batch-built (manifest-only) stores.
-    * `op` is the commit's INTENT stamp ([[StoreLineage.history]]'s
-    * `operation` column — the Delta commitInfo idea): what the writer
-    * meant, beside what the manifest diff shows it did. */
-  private def writeMaintenanceTxn(s: SparkSession, path: String, v: Int,
-      op: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(txnDir(path)))) {
-      import s.implicits._
-      Seq((-v.toLong, System.currentTimeMillis(), op))
-        .toDF("batch_id", "commit_ts", "operation")
-        .coalesce(1).write.mode(SaveMode.Overwrite).parquet(txnPath(path, v))
-      StoreIo.ops.createMarker(fs, new org.apache.hadoop.fs.Path(
-        s"${txnPath(path, v)}/batch_${-v}.marker"))
-      maybeCheckpoint(s, path, v)
-    }
+    }.tip.get
   }
 
   /** ERASURE EXECUTION, DELETION-VECTOR MODE — the O(deleted rows)
@@ -1641,14 +1561,9 @@ object VersionedStore extends QueryPack {
     var needFold = false
     val committed = WriterLease.withLease(s, path, "deleteCommit") {
     requireSupportedKey(keys, keyCol)
-    var attempts = 0
-    var abandoned = Set.empty[Int]
-    var done: Option[Int] = None
-    while (done.isEmpty && attempts < 5) {
-      attempts += 1
-      val vs = versions(s, path)
-      require(vs.nonEmpty, s"no committed versions under $path")
-      val cur = vs.last
+    TxnLog.commit(s, path, "delete_dv", settleTimeoutMs = settleTimeoutMs) { tip =>
+      require(tip.nonEmpty, s"no committed versions under $path")
+      val cur = tip.get
       requireKeyClassMatch(s, path, cur, keys, keyCol)
       // band AND bloom pruning (round-14 verdict #3): dv mode exists for
       // SCATTERED batches, where bands alone admit every file and the
@@ -1668,56 +1583,44 @@ object VersionedStore extends QueryPack {
           inFiles.join(dv, Seq(keyCol), "left_anti"))
         Some(fresh).filter(_.limit(1).count() > 0)
       }
-      presentKeys match {
-        case None => done = Some(cur) // no-op erasure: nothing newly purged
-        case Some(fresh) =>
-          val v = claimVersion(s, path, cur + 1)
-          // commit validity (burn-and-loop, round-13 verdict #5): a data
-          // commit landing meanwhile abandons this slot and the erasure
-          // re-plans against the new tip — no quiesce required
-          val settled = settleBelow(s, path, v, abandoned, settleTimeoutMs)
-          if (!settled.contains(cur)) { abandoned += v; abandonSlot(s, path, v) }
-          else {
-            // the cumulative dv: parent's live set ∪ this batch —
-            // O(unfolded deletions) bytes, the commit's ONLY data write,
-            // SIZED from its key volume (the CompactStore ceil rule —
-            // round-14 verdict #4; a small vector still lands in one
-            // file, one nearing file scale splits instead of growing a
-            // single monolith)
-            val newDv = curDv.fold(fresh)(dv => dv.unionByName(fresh).distinct())
-            val nDv = writeDvSized(s, path, v, newDv, keyCol, dvTargetFileBytes)
-            // AUTOMATIC FOLD TRIGGER (round-14 verdict #4): once the
-            // vector crosses the configured fraction of the tip's
-            // rows (exact per-file counts from the side relation — a
-            // k-row driver sum, no scan), the store is overdue for
-            // its physical fold; the compaction runs AFTER this lease
-            // releases (compactCommit takes its own)
-            needFold = autoFoldFraction > 0 &&
-              storeRowsOf(s, path, cur)
-                .exists(total => total > 0 && nDv >= autoFoldFraction * total)
-            // write-path CDC: the freshly-vectored keys' pre-images —
-            // O(deleted rows) bytes the owning-file presence scan
-            // already touched; the adjacent-pair feed then reads ZERO
-            // data files for this commit
-            writeCdc(s, path, v,
-              s.read.parquet(owning.toIndexedSeq: _*)
-                .join(fresh.select(col(keyCol)).distinct(), Seq(keyCol),
-                  "left_semi")
-                .withColumn("_change_type", lit("delete")), keyCol)
-            // manifest = parent's, verbatim (stats columns and all):
-            // every data file shared by reference — zero amplification
-            s.read.parquet(manifestPath(path, cur))
-              .coalesce(1).write.mode(SaveMode.Overwrite)
-              .parquet(manifestPath(path, v))
-            writeMaintenanceTxn(s, path, v, "delete_dv")
-            requireNoLineageGap(s, path, cur, v)
-            done = Some(v)
-          }
-      }
-    }
-    done.getOrElse(throw new IllegalStateException(
-      s"deleteCommitDv on $path lost the commit race 5 times — a writer " +
-        "is committing continuously; back off and retry"))
+      // the commit writes no data files: nothing to stage, and a data
+      // commit landing meanwhile declines the publish (re-plan against
+      // the new tip — no quiesce required)
+      presentKeys.map { fresh => v => settled => settled == tip && {
+        // the cumulative dv: parent's live set ∪ this batch —
+        // O(unfolded deletions) bytes, the commit's ONLY data write,
+        // SIZED from its key volume (the CompactStore ceil rule —
+        // round-14 verdict #4; a small vector still lands in one
+        // file, one nearing file scale splits instead of growing a
+        // single monolith)
+        val newDv = curDv.fold(fresh)(dv => dv.unionByName(fresh).distinct())
+        val nDv = writeDvSized(s, path, v, newDv, keyCol, dvTargetFileBytes)
+        // AUTOMATIC FOLD TRIGGER (round-14 verdict #4): once the
+        // vector crosses the configured fraction of the tip's
+        // rows (exact per-file counts from the side relation — a
+        // k-row driver sum, no scan), the store is overdue for
+        // its physical fold; the compaction runs AFTER this lease
+        // releases (compactCommit takes its own)
+        needFold = autoFoldFraction > 0 &&
+          storeRowsOf(s, path, cur)
+            .exists(total => total > 0 && nDv >= autoFoldFraction * total)
+        // write-path CDC: the freshly-vectored keys' pre-images —
+        // O(deleted rows) bytes the owning-file presence scan
+        // already touched; the adjacent-pair feed then reads ZERO
+        // data files for this commit
+        writeCdc(s, path, v,
+          s.read.parquet(owning.toIndexedSeq: _*)
+            .join(fresh.select(col(keyCol)).distinct(), Seq(keyCol),
+              "left_semi")
+            .withColumn("_change_type", lit("delete")), keyCol)
+        // manifest = parent's, verbatim (stats columns and all):
+        // every data file shared by reference — zero amplification
+        s.read.parquet(manifestPath(path, cur))
+          .coalesce(1).write.mode(SaveMode.Overwrite)
+          .parquet(manifestPath(path, v))
+        true
+      }}
+    }.tip.get
     }
     // the triggered fold: a compaction commit rewrites the data without
     // the dv rows and supersedes the lineage with an empty vector — the
@@ -2276,56 +2179,46 @@ object VersionedStore extends QueryPack {
       .orderBy(col("o_custkey"))
   }
 
-  /** Batch-side APPEND COMMIT under the full txn discipline — the
-    * batch twin of the streaming commit sink (claimed slot, settle,
-    * carry-forward manifest, commit_ts txn record, marker LAST), so a
-    * batch backfill and a live stream can share one store without
-    * coordination: the claim protocol serializes them. The pseudo
+  /** Batch-side APPEND COMMIT: the [[appendStage]] plan through the
+    * [[TxnLog.commit]] loop, the same plan the streaming commit sink
+    * runs, so a batch backfill and a live stream can share one store
+    * without coordination: the claim protocol serializes them. The pseudo
     * batch id is `-(version)` — negative like maintenance commits, so
     * stream replay checks can never mistake a backfill for a replayed
     * trigger. */
   def appendCommit(s: SparkSession, path: String, batch: DataFrame,
       clusterCol: String, parts: Int,
-      beforeMarker: Int => Unit = _ => ()): Int = {
-    // STORE-BIRTH race guard: this committer writes txn records, so
-    // commit detection must be MARKER-GATED from the first claim — a
-    // missing txn dir makes committedTip fall back to the manifest
-    // listing, where a concurrent writer's in-flight manifest reads as
-    // a committed version (caught by ConcurrentCommitSpec's 4-appender
-    // case: settle landed on a half-written manifest at store birth)
-    val bfs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    bfs.mkdirs(new org.apache.hadoop.fs.Path(txnDir(path)))
-    val latest = committedTip(s, path)
-    val v = claimVersion(s, path, latest.getOrElse(0) + 1)
+      beforeMarker: Int => Unit = _ => ()): Int =
+    TxnLog.commit(s, path, "append", startsLineage = true) { _ =>
+      Some(appendStage(s, path, beforeMarker)(
+        batch.repartitionByRange(math.max(1, parts), col(clusterCol))
+          .sortWithinPartitions(clusterCol)
+          .write.mode(SaveMode.Overwrite).parquet(_)))
+    }.committed.get
+
+  /** The APPEND plan, shared with the streaming append sink: `write`
+    * lands the rows in the slot's own data dir (`data/v<N>`, Overwrite —
+    * slots are never reused once committed, so it can only clobber an
+    * uncommitted crash leftover); the publish step REBASES onto the
+    * settled tip — its files carried by reference plus the new ones —
+    * so neither of two racing appenders loses the other's rows.
+    * `beforeMarker` writes side relations inside the claimed slot,
+    * before the marker that commits it (a crash leaves them invisible
+    * leftovers vacuum reclaims with the slot) — the Expectations
+    * quarantine hook. */
+  private[graft] def appendStage(s: SparkSession, path: String,
+      beforeMarker: Int => Unit = _ => ())(write: String => Unit): TxnLog.Stage = { v =>
     val dataDir = dataPath(path) + s"/v$v"
-    batch.repartitionByRange(math.max(1, parts), col(clusterCol))
-      .sortWithinPartitions(clusterCol)
-      .write.mode(SaveMode.Overwrite).parquet(dataDir)
+    write(dataDir)
     val newFiles = hadoopLs(s, dataDir)
-    val settled = settleBelow(s, path, v)
-    val parent = settled.map(pv => versionFiles(s, path, pv).toSet)
-      .getOrElse(Set.empty[String])
-    writeManifest(s, path, v, parent ++ newFiles)
-    ColStats.onCommit(s, path, newFiles.toSeq.sorted)
-    // side relations ride the version's atomicity: written INSIDE the
-    // claimed slot, before the marker that commits it (a crash leaves
-    // them invisible leftovers vacuum reclaims with the slot) — the
-    // Expectations quarantine hook
-    beforeMarker(v)
-    import s.implicits._
-    Seq((-v.toLong, System.currentTimeMillis(), "append"))
-      .toDF("batch_id", "commit_ts", "operation")
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(txnPath(path, v))
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    StoreIo.ops.createMarker(fs, new org.apache.hadoop.fs.Path(
-      s"${txnPath(path, v)}/batch_${-v}.marker"))
-    maybeCheckpoint(s, path, v)
-    // post-commit lineage check — the streaming sinks' settle-gap
-    // detection (round-13 advice) applied to the batch appender too
-    requireNoLineageGap(s, path, settled.getOrElse(0), v)
-    v
+    settled => {
+      val parent = settled.map(pv => versionFiles(s, path, pv).toSet)
+        .getOrElse(Set.empty[String])
+      writeManifest(s, path, v, parent ++ newFiles)
+      ColStats.onCommit(s, path, newFiles.toSeq.sorted)
+      beforeMarker(v)
+      true
+    }
   }
 
   /** [[readVersion]] with parquet schema merging — the reader an

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import graft.sources.VersionedStore
+import graft.sources.{TxnLog, VersionedStore}
 import graft.streaming.Streams.EntityUpdate
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQuery}
@@ -18,8 +17,8 @@ import org.apache.spark.storage.StorageLevel
   * batch touches (located through per-file key stats carried in the
   * manifest — the q82 planning step, paid at write time instead of a
   * store scan), carries every untouched file forward by reference, and
-  * commits a new manifest + txn marker (the [[VersionedCommitSink]]
-  * exactly-once discipline: a checkpoint-replayed batch id is skipped).
+  * commits a new manifest + txn marker through [[TxnLog.commit]]
+  * (exactly once: a checkpoint-replayed batch id is skipped).
   *
   * Per-trigger cost therefore tracks the BATCH — bytes written =
   * batch rows + the touched files' survivors; bytes read = the touched
@@ -155,16 +154,14 @@ object UpsertSink {
     * (checkpoint replay). `initialPartitions` sizes the FIRST commit's
     * file count (later commits inherit the touched-file count).
     *
-    * Optimistic concurrency (the round-12 advice race): the version
-    * slot is CLAIMED atomically before any shared-location write, so a
-    * concurrent committer or maintenance compaction can never land on
-    * the same number and overwrite this txn record. Unlike an append,
-    * a COW rewrite is computed AGAINST a specific parent (the touched
-    * files' survivors), so after the data lands the commit settles and
-    * verifies the tip is still that parent; if another writer committed
-    * meanwhile, this attempt's slot is abandoned (vacuum reclaims the
-    * leftovers) and the whole rewrite RETRIES against the new tip —
-    * correctness over wasted work, bounded attempts. */
+    * Optimistic concurrency runs through [[TxnLog.commit]]. Unlike an
+    * append, a COW rewrite is computed AGAINST a specific parent (the
+    * touched files' survivors), so its publish step accepts the settled
+    * tip only when it is still that parent or the interleaved commits
+    * are provably disjoint; otherwise it declines, the slot is
+    * abandoned (vacuum reclaims the leftovers) and the whole rewrite
+    * RETRIES against the new tip — correctness over wasted work,
+    * bounded attempts. */
   def upsertBatch(batch: DataFrame, path: String, batchId: Long,
       keyCol: String, initialPartitions: Int = 1,
       settleTimeoutMs: Long = 30000L): Option[Int] =
@@ -216,44 +213,15 @@ object UpsertSink {
     try f(ds) finally if (own) ds.unpersist(blocking = false)
   }
 
-  /** The claim → settle → commit loop of [[upsertBatch]], over the
-    * persisted non-empty batch and its persisted distinct keys
-    * (`allKeys`: batch ∪ drop keys). */
+  /** The COW upsert plan of [[upsertBatch]] through the
+    * [[TxnLog.commit]] loop, over the persisted non-empty batch and its
+    * persisted distinct keys (`allKeys`: batch ∪ drop keys). */
   private def commit(batch: DataFrame, allKeys: DataFrame, path: String,
       batchId: Long, keyCol: String, initialPartitions: Int,
       settleTimeoutMs: Long, operation: String, keys: BatchKeys): Option[Int] = {
     val s = batch.sparkSession
-    // marker-gate commit detection from store birth (the appendCommit
-    // race guard): this committer writes txn records, so the txn dir
-    // must exist before any claim/settle consults committedTip
-    new Path(VersionedCommitSink.txnDir(path))
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-      .mkdirs(new Path(VersionedCommitSink.txnDir(path)))
-    // lineage check: upserts resolve their parent through txn markers,
-    // so a store carrying manifest-only (batch-built) versions above
-    // the txn tip would make every settle disagree with `latest`
-    // forever — fail loudly instead of spinning the retry loop
-    require(VersionedStore.committedTip(s, path)
-        == VersionedCommitSink.latestCommitted(s, path),
-      s"store $path has manifest-only (batch-built) versions above its " +
-        "txn tip: keyed upserts require a txn-lineage store (built " +
-        "through upsertBatch/appendBatch/appendCommit)")
-    var attempts = 0
-    var abandoned = Set.empty[Int]
-    // 10 attempts with jittered linear backoff: under sustained N-way
-    // contention every loser re-plans against the new tip, so equal-
-    // speed writers can trade losses for several rounds — the backoff
-    // de-phases them (the Delta ConcurrentModification retry shape)
-    // while the bound still fails loudly on a genuinely livelocked
-    // store instead of spinning forever
-    while (attempts < 10) {
-      attempts += 1
-      if (attempts > 1)
-        Thread.sleep(100L * (attempts - 1) + (System.nanoTime() % 97))
-      val latest = VersionedCommitSink.latestCommitted(s, path)
-      if (VersionedCommitSink.alreadyCommitted(s, path, latest, batchId)) return None
-      val v = VersionedStore.claimVersion(s, path, latest.getOrElse(0) + 1)
-
+    TxnLog.commit(s, path, operation, Some(batchId), startsLineage = true,
+        settleTimeoutMs) { latest =>
       // Parent manifest with per-file key stats: driver-side and bounded
       // by the store's file count (the manifest-store contract). Touched
       // files = those whose [mn, mx] band contains a batch key — a
@@ -264,142 +232,124 @@ object UpsertSink {
       if (parent.nonEmpty)
         VersionedStore.requireKeyClassMatch(s, parent.head.file, batch, keyCol)
       val owning: Array[String] = owningFiles(allKeys, parent, keyCol)
-
-      // Rewrite = touched files' survivors + the batch (keyed replace:
-      // the stream emits full merged entities, newest state wins; drop
-      // keys contribute to the anti-join but no replacement rows).
-      val rewritten =
-        if (owning.isEmpty) batch
-        else s.read.parquet(owning.toIndexedSeq: _*)
-          .join(allKeys, Seq(keyCol), "left_anti")
-          .unionByName(batch)
-      val parts = math.max(1, if (owning.isEmpty) initialPartitions else owning.length)
-      // per-VERSION data dir: versions allocate fresh above the committed
-      // tip and never reuse once committed, so the Overwrite can only
-      // clobber an UNCOMMITTED crash leftover. A per-batch-id dir is
-      // unsafe under carry-forward: a checkpoint reset restarts ids at 0
-      // and batch_0's rewrite would delete files the live manifest still
-      // references (round-12 review finding).
-      val dataDir = path + s"/data/v$v"
-      rewritten.repartitionByRange(parts, col(keyCol))
-        .sortWithinPartitions(keyCol)
-        .write.mode(SaveMode.Overwrite).parquet(dataDir)
-
-      // the COW validity check: the rewrite above is only a correct
-      // next version if the tip is STILL the parent it was computed
-      // against — or if the interleaved commits are provably DISJOINT
-      val settled = VersionedStore.settleBelow(s, path, v, abandoned,
-        settleTimeoutMs)
-      // DISJOINT-CONFLICT fast path (the Delta conflict-detection rule,
-      // round-16 verdict #6): when the tip moved, this rewrite is still
-      // a valid next version provided (a) every owning file it
-      // supersedes survived the interleaved commits untouched, and
-      // (b) no interleaved commit added a file whose key band can
-      // overlap this batch's keys (bands over-approximate, so a false
-      // overlap costs a replan, never a wrong tip). The commit then
-      // carries the SETTLED manifest minus the owning files — nothing
-      // re-planned. Without this, N equal-speed writers admit exactly
-      // one winner per round and a chronic loser burns all attempts.
-      val commitParent: Option[Array[FileStats]] =
-        if (settled == latest) Some(parent)
-        else settled.flatMap { sv =>
-          val sParent = statsManifest(s, path, sv, keyCol)
-          val sSet = sParent.map(_.file).toSet
-          val latestSet = parent.map(_.file).toSet
-          val ownSurvived = owning.forall(sSet.contains)
-          val addedOverlap = sParent.exists(f =>
-            !latestSet(f.file) && !(f.mx < keys.lo || f.mn > keys.hi))
-          if (ownSurvived && !addedOverlap) Some(sParent) else None
-        }
-      if (commitParent.isDefined) {
-        val parentStats = commitParent.get
-        // Stats for the new files: a read-back of ONLY the files this
-        // commit wrote (O(batch)), grouped by physical file.
-        // a merge whose every touched row was deleted writes no files
-        val newFiles = VersionedStore.hadoopLs(s, dataDir)
-        val newStats = if (newFiles.isEmpty) Array.empty[FileStats] else {
-          val newData = s.read.parquet(newFiles.toIndexedSeq: _*)
-          newData
-            .groupBy(input_file_name().as("file"))
-            .agg(min(VersionedStore.keyLong(newData, keyCol)).as("mn"),
-              max(VersionedStore.keyLong(newData, keyCol)).as("mx"))
-            .collect()
-            .map(r => FileStats(VersionedStore.canon(r.getString(0)),
-              r.getLong(1), r.getLong(2)))
-        }
-
-        val ownSet = owning.toSet
-        writeManifest(s, path, v,
-          parentStats.filterNot(fs => ownSet(fs.file)).toSeq ++ newStats)
-        graft.sources.ColStats.onCommit(s, path, newFiles.toSeq.sorted)
-        // write-path CDC (round 15): classify the batch against the
-        // pre-images it replaced — MINUS the parent's deletion vector
-        // (a dv-erased key's physical leftover is not a pre-image; its
-        // re-upsert classifies as the INSERT it logically is, matching
-        // the metadata-diff fallback bit for bit) — O(batch) rows
-        // persisted at commit, so the change feed never re-diffs the
-        // file-sized rewrite; identical-payload replays classify to NO
-        // rows (the s15 rule)
-        val parentDv = VersionedStore.dvAt(s, path, settled.getOrElse(0))
-        val cdcRows =
-          if (owning.isEmpty)
-            batch.withColumn("_change_type", lit("insert"))
-          else {
-            val preRaw = s.read.parquet(owning.toIndexedSeq: _*)
-              .join(allKeys, Seq(keyCol), "left_semi")
-            val pre = parentDv.fold(preRaw)(dv =>
-              preRaw.join(broadcast(dv), dv.columns.toSeq, "left_anti"))
-            graft.sources.ChangeFeed.keyedDiff(pre, batch.toDF(), keyCol)
+      Some { v =>
+        // Rewrite = touched files' survivors + the batch (keyed replace:
+        // the stream emits full merged entities, newest state wins; drop
+        // keys contribute to the anti-join but no replacement rows).
+        val rewritten =
+          if (owning.isEmpty) batch
+          else s.read.parquet(owning.toIndexedSeq: _*)
+            .join(allKeys, Seq(keyCol), "left_anti")
+            .unionByName(batch)
+        val parts = math.max(1, if (owning.isEmpty) initialPartitions else owning.length)
+        // per-VERSION data dir: slots are never reused once committed,
+        // so the Overwrite can only clobber an UNCOMMITTED crash
+        // leftover. A per-batch-id dir is unsafe under carry-forward: a
+        // checkpoint reset restarts ids at 0 and batch_0's rewrite would
+        // delete files the live manifest still references (round-12
+        // review finding).
+        val dataDir = VersionedStore.dataPath(path) + s"/v$v"
+        rewritten.repartitionByRange(parts, col(keyCol))
+          .sortWithinPartitions(keyCol)
+          .write.mode(SaveMode.Overwrite).parquet(dataDir)
+        settled => {
+          // the COW validity check: the rewrite above is only a correct
+          // next version if the tip is STILL the parent it was computed
+          // against — or if the interleaved commits are provably
+          // DISJOINT (the Delta conflict-detection rule, round-16
+          // verdict #6): (a) every owning file it supersedes survived
+          // the interleaved commits untouched, and (b) no interleaved
+          // commit added a file whose key band can overlap this batch's
+          // keys (bands over-approximate, so a false overlap costs a
+          // replan, never a wrong tip). The commit then carries the
+          // SETTLED manifest minus the owning files — nothing
+          // re-planned. Without this, N equal-speed writers admit
+          // exactly one winner per round and a chronic loser burns all
+          // attempts.
+          val commitParent: Option[Array[FileStats]] =
+            if (settled == latest) Some(parent)
+            else settled.flatMap { sv =>
+              val sParent = statsManifest(s, path, sv, keyCol)
+              val sSet = sParent.map(_.file).toSet
+              val latestSet = parent.map(_.file).toSet
+              val ownSurvived = owning.forall(sSet.contains)
+              val addedOverlap = sParent.exists(f =>
+                !latestSet(f.file) && !(f.mx < keys.lo || f.mn > keys.hi))
+              if (ownSurvived && !addedOverlap) Some(sParent) else None
+            }
+          commitParent.foreach { parentStats =>
+            publish(batch, allKeys, path, v, settled, dataDir, keyCol,
+              parentStats, owning, keys)
           }
-        // at most 2 change rows (an update's pre- and post-image) per
-        // distinct key: a file-count bound, so the diff runs only once,
-        // in the write itself
-        VersionedStore.writeCdc(s, path, v, cdcRows, keyCol,
-          rowBound = Some(2 * keys.count))
-        // key-based dv RESURRECTION: a keyed write of key K supersedes
-        // K's pending deletion — shrink the cumulative vector at this
-        // slot, or the re-onboarded subject's new row stays invisible
-        // until the fold (the COW purge path's re-upsert contract,
-        // PurgeSinkSpec, extended to dv mode; position-based DV formats
-        // don't have this hazard, the key-based form must handle it)
-        parentDv.foreach { dv =>
-          val batchKeys = batch.select(col(keyCol)).distinct()
-          if (dv.join(batchKeys, Seq(keyCol), "left_semi")
-              .limit(1).count() > 0)
-            VersionedStore.writeDvSized(s, path, v,
-              dv.join(batchKeys, Seq(keyCol), "left_anti"), keyCol)
+          commitParent.isDefined
         }
-        // txn parquet, then the marker LAST — the marker's atomic create is
-        // the commit, its name carries the batch id for the replay check
-        // (the VersionedCommitSink.appendBatch discipline).
-        import s.implicits._
-        Seq((batchId, System.currentTimeMillis(), operation))
-          .toDF("batch_id", "commit_ts", "operation")
-          .coalesce(1).write.mode(SaveMode.Overwrite)
-          .parquet(VersionedCommitSink.txnPath(path, v))
-        val fs = new Path(VersionedCommitSink.txnDir(path))
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        graft.sources.StoreIo.ops.createMarker(fs, new Path(
-          s"${VersionedCommitSink.txnPath(path, v)}/batch_$batchId.marker"))
-        VersionedStore.maybeCheckpoint(s, path, v)
-        // POST-COMMIT LINEAGE CHECK (round-13 advice): a slow lower-slot
-        // writer that outlived settleBelow's timeout and then committed
-        // during this attempt's commit window would have its rows
-        // silently missing from the tip lineage — detect and fail loudly
-        // (VersionedStore.requireNoLineageGap) instead of returning
-        // success.
-        VersionedStore.requireNoLineageGap(s, path, settled.getOrElse(0), v)
-        return Some(v)
       }
-      // tip moved while rewriting: leave the claimed slot burned (the
-      // uncommitted data dir is invisible; vacuum reclaims it), MARK it
-      // abandoned so concurrent settlers skip it at once, and loop
-      abandoned += v
-      VersionedStore.abandonSlot(s, path, v)
+    }.committed
+  }
+
+  /** Publish a COW upsert at slot `v` over `parentStats`: the new
+    * manifest, column stats, write-path CDC and the dv resurrection. */
+  private def publish(batch: DataFrame, allKeys: DataFrame, path: String,
+      v: Int, settled: Option[Int], dataDir: String, keyCol: String,
+      parentStats: Array[FileStats], owning: Array[String],
+      keys: BatchKeys): Unit = {
+    val s = batch.sparkSession
+    // Stats for the new files: a read-back of ONLY the files this
+    // commit wrote (O(batch)), grouped by physical file.
+    // a merge whose every touched row was deleted writes no files
+    val newFiles = VersionedStore.hadoopLs(s, dataDir)
+    val newStats = if (newFiles.isEmpty) Array.empty[FileStats] else {
+      val newData = s.read.parquet(newFiles.toIndexedSeq: _*)
+      newData
+        .groupBy(input_file_name().as("file"))
+        .agg(min(VersionedStore.keyLong(newData, keyCol)).as("mn"),
+          max(VersionedStore.keyLong(newData, keyCol)).as("mx"))
+        .collect()
+        .map(r => FileStats(VersionedStore.canon(r.getString(0)),
+          r.getLong(1), r.getLong(2)))
     }
-    throw new IllegalStateException(
-      s"upsertBatch on $path lost the commit race 10 times — a writer is " +
-        "committing continuously; back off and retry")
+
+    val ownSet = owning.toSet
+    writeManifest(s, path, v,
+      parentStats.filterNot(fs => ownSet(fs.file)).toSeq ++ newStats)
+    graft.sources.ColStats.onCommit(s, path, newFiles.toSeq.sorted)
+    // write-path CDC (round 15): classify the batch against the
+    // pre-images it replaced — MINUS the parent's deletion vector
+    // (a dv-erased key's physical leftover is not a pre-image; its
+    // re-upsert classifies as the INSERT it logically is, matching
+    // the metadata-diff fallback bit for bit) — O(batch) rows
+    // persisted at commit, so the change feed never re-diffs the
+    // file-sized rewrite; identical-payload replays classify to NO
+    // rows (the s15 rule)
+    val parentDv = VersionedStore.dvAt(s, path, settled.getOrElse(0))
+    val cdcRows =
+      if (owning.isEmpty)
+        batch.withColumn("_change_type", lit("insert"))
+      else {
+        val preRaw = s.read.parquet(owning.toIndexedSeq: _*)
+          .join(allKeys, Seq(keyCol), "left_semi")
+        val pre = parentDv.fold(preRaw)(dv =>
+          preRaw.join(broadcast(dv), dv.columns.toSeq, "left_anti"))
+        graft.sources.ChangeFeed.keyedDiff(pre, batch.toDF(), keyCol)
+      }
+    // at most 2 change rows (an update's pre- and post-image) per
+    // distinct key: a file-count bound, so the diff runs only once,
+    // in the write itself
+    VersionedStore.writeCdc(s, path, v, cdcRows, keyCol,
+      rowBound = Some(2 * keys.count))
+    // key-based dv RESURRECTION: a keyed write of key K supersedes
+    // K's pending deletion — shrink the cumulative vector at this
+    // slot, or the re-onboarded subject's new row stays invisible
+    // until the fold (the COW purge path's re-upsert contract,
+    // PurgeSinkSpec, extended to dv mode; position-based DV formats
+    // don't have this hazard, the key-based form must handle it)
+    parentDv.foreach { dv =>
+      val batchKeys = batch.select(col(keyCol)).distinct()
+      if (dv.join(batchKeys, Seq(keyCol), "left_semi")
+          .limit(1).count() > 0)
+        VersionedStore.writeDvSized(s, path, v,
+          dv.join(batchKeys, Seq(keyCol), "left_anti"), keyCol)
+    }
   }
 
   /** Merge one micro-batch of entity updates into the keyed store. */

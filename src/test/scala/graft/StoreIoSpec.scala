@@ -1,6 +1,7 @@
 package graft
 
 import graft.sources.{ColStats, StoreIo, VersionedStore}
+import graft.streaming.{UpsertSink, VersionedCommitSink}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -32,6 +33,23 @@ class StoreIoSpec extends AnyFunSuite {
     }
     def rename(fs: FileSystem, src: Path, dst: Path): Boolean = {
       log("rename", dst); StoreIo.HadoopOps.rename(fs, src, dst)
+    }
+  }
+
+  /** A crash injected at the seam: the k-th primitive call and every
+    * later one throw before touching the store — the process died at
+    * call k and makes no further calls. */
+  private class InjectedCrash(k: Int) extends RuntimeException(s"injected crash at call $k")
+  private class Crashing(k: Int) extends Recording {
+    private def due(): Unit = if (events.size >= k - 1) throw new InjectedCrash(k)
+    override def createNoOverwrite(fs: FileSystem, p: Path): Boolean = {
+      due(); super.createNoOverwrite(fs, p)
+    }
+    override def createMarker(fs: FileSystem, p: Path): Unit = {
+      due(); super.createMarker(fs, p)
+    }
+    override def rename(fs: FileSystem, src: Path, dst: Path): Boolean = {
+      due(); super.rename(fs, src, dst)
     }
   }
 
@@ -103,5 +121,94 @@ class StoreIoSpec extends AnyFunSuite {
     val vs = VersionedStore.versions(spark, path)
     assert(vs == Seq(1, 2, 4), s"conditional-put claims landed on $vs")
     assert(VersionedStore.readVersion(spark, path, 4).count() == 90)
+  }
+
+  /** One committer under the crash matrix: `setup` builds the store,
+    * `commit` is the commit under test (re-run verbatim after a crash —
+    * same batch id), `expected` the tip's rows after it. */
+  private case class Crashable(name: String, setup: String => Unit,
+      commit: String => Unit, expected: Seq[(Long, Long)],
+      replayable: Boolean = true)
+
+  private val kv = (r: Seq[(Long, Long)]) => r.toDF("key", "amount")
+  private val crashables = Seq(
+    Crashable("appendBatch",
+      p => VersionedCommitSink.appendBatch(kv((1L to 20L).map(k => (k, k))), p, 0L),
+      p => VersionedCommitSink.appendBatch(kv((21L to 30L).map(k => (k, k))), p, 1L,
+        settleTimeoutMs = 500L),
+      (1L to 30L).map(k => (k, k))),
+    Crashable("upsertBatch",
+      p => UpsertSink.upsertBatch(kv((1L to 20L).map(k => (k, 0L))), p, 0L, "key"),
+      p => UpsertSink.upsertBatch(kv((11L to 30L).map(k => (k, 1L))), p, 1L, "key",
+        settleTimeoutMs = 500L),
+      (1L to 10L).map(k => (k, 0L)) ++ (11L to 30L).map(k => (k, 1L))),
+    Crashable("deleteCommit",
+      p => VersionedCommitSink.appendBatch(kv((1L to 30L).map(k => (k, k))), p, 0L),
+      p => VersionedStore.deleteCommit(spark, p, (1L to 5L).toDF("key"), "key",
+        settleTimeoutMs = 500L),
+      (6L to 30L).map(k => (k, k))),
+    Crashable("compactCommit",
+      p => {
+        VersionedCommitSink.appendBatch(kv((1L to 15L).map(k => (k, k))), p, 0L)
+        VersionedCommitSink.appendBatch(kv((16L to 30L).map(k => (k, k))), p, 1L)
+      },
+      p => VersionedStore.compactCommit(spark, p, "key", 1L << 20,
+        settleTimeoutMs = 500L),
+      (1L to 30L).map(k => (k, k)), replayable = false),
+    Crashable("deleteCommitDv",
+      p => VersionedCommitSink.appendBatch(kv((1L to 30L).map(k => (k, k))), p, 0L),
+      p => VersionedStore.deleteCommitDv(spark, p, (1L to 5L).toDF("key"), "key",
+        settleTimeoutMs = 500L),
+      (6L to 30L).map(k => (k, k))),
+    Crashable("appendCommit",
+      p => VersionedStore.appendCommit(spark, p, kv((1L to 20L).map(k => (k, k))), "key", 1),
+      p => VersionedStore.appendCommit(spark, p, kv((21L to 30L).map(k => (k, k))), "key", 1),
+      (1L to 30L).map(k => (k, k)), replayable = false))
+
+  private def rowsAt(path: String, v: Int): Seq[(Long, Long)] =
+    VersionedStore.readVersion(spark, path, v).select("key", "amount")
+      .as[(Long, Long)].collect().toSeq.sorted
+
+  crashables.foreach { c =>
+    test(s"crash matrix: ${c.name} survives a crash at every primitive call") {
+      val clean = tmp(s"clean_${c.name}")
+      c.setup(clean)
+      val rec = new Recording
+      StoreIo.withOps(rec)(c.commit(clean))
+      val calls = rec.events.size
+      assert(calls >= 2, s"${c.name} made $calls seam calls: ${rec.events}")
+      (1 to calls).foreach { k =>
+        val path = tmp(s"crash_${c.name}_$k")
+        c.setup(path)
+        val before = VersionedStore.versions(spark, path)
+        val beforeRows = before.map(v => v -> rowsAt(path, v))
+        val crash = intercept[Exception](StoreIo.withOps(new Crashing(k))(c.commit(path)))
+        assert(Iterator.iterate[Throwable](crash)(_.getCause).takeWhile(_ != null)
+          .exists(_.isInstanceOf[InjectedCrash]), s"k=$k: unexpected failure $crash")
+        // restart: the same commit again, then a replay of it
+        c.commit(path)
+        val after = VersionedStore.versions(spark, path)
+        if (c.replayable) {
+          c.commit(path)
+          assert(VersionedStore.versions(spark, path) == after,
+            s"k=$k: a replayed ${c.name} committed again")
+        }
+        // versions committed before the crash read unchanged
+        beforeRows.foreach { case (v, rows) =>
+          assert(rowsAt(path, v) == rows, s"k=$k: v$v changed under the crash")
+        }
+        // exactly one new version, carrying its parent: no lineage gap
+        assert(after.init == before, s"k=$k: versions $before -> $after")
+        VersionedStore.requireNoLineageGap(spark, path, before.last, after.last)
+        // the tip holds the expected rows exactly once
+        assert(rowsAt(path, after.last) == c.expected, s"k=$k: tip rows")
+        // vacuum reclaims the crash leftovers; the store keeps committing
+        VersionedStore.vacuum(spark, path, keepVersions = 10, claimGraceMs = 0L)
+        VersionedCommitSink.appendBatch(kv(Seq((1000L, 1000L))), path, 100L,
+          settleTimeoutMs = 500L)
+        assert(rowsAt(path, VersionedStore.versions(spark, path).last) ==
+          (c.expected :+ ((1000L, 1000L))).sorted, s"k=$k: store after vacuum")
+      }
+    }
   }
 }
