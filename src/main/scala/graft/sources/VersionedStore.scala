@@ -65,17 +65,10 @@ object VersionedStore extends QueryPack {
   private[graft] def canonCol(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     regexp_replace(c, "^[a-zA-Z][a-zA-Z0-9+.-]*:(//)?", "")
 
-  private[graft] def hadoopLs(s: SparkSession, dir: String): Set[String] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Set.empty
-    else fs.listStatus(p).filter(_.isFile).map(st => canon(st.getPath.toString))
-      .filter { f =>
-        val name = f.substring(f.lastIndexOf('/') + 1)
-        // data files only: no _SUCCESS markers, no .crc side files
-        name.endsWith(".parquet") && !name.startsWith(".") && !name.startsWith("_")
-      }.toSet
-  }
+  /** The parquet data files directly under `dir`, canonical
+    * ([[LocalParquet.ls]]: no _SUCCESS markers, no .crc side files). */
+  private[graft] def hadoopLs(s: SparkSession, dir: String): Set[String] =
+    LocalParquet.ls(s, dir).map(st => canon(st.getPath.toString)).toSet
 
   private[graft] def writeManifest(s: SparkSession, path: String, v: Int,
       files: Iterable[String]): Unit = {
@@ -84,10 +77,26 @@ object VersionedStore extends QueryPack {
       .coalesce(1).write.mode(SaveMode.Overwrite).parquet(manifestPath(path, v))
   }
 
+  /** Version `v`'s manifest table, read on the driver: one listing
+    * and one small file, no Spark job. */
+  private[graft] def manifest(s: SparkSession, path: String,
+      v: Int): LocalParquet.Table =
+    LocalParquet.table(s, manifestPath(path, v))
+
+  private[graft] def manifestFiles(m: LocalParquet.Table): Array[String] =
+    m.rows.map(_.getAs[String]("file")).toArray.sorted
+
+  /** The manifest's per-file key bands (file, mn, mx), when its writer
+    * carried them. */
+  private[graft] def manifestBands(
+      m: LocalParquet.Table): Option[Array[(String, Long, Long)]] =
+    if (!(m.has("mn") && m.has("mx"))) None
+    else Some(m.rows.map(r => (r.getAs[String]("file"), r.getAs[Long]("mn"),
+      r.getAs[Long]("mx"))).toArray)
+
   /** Files of version `v`, read from its manifest table. */
   def versionFiles(s: SparkSession, path: String, v: Int): Array[String] =
-    s.read.parquet(manifestPath(path, v))
-      .select(col("file")).collect().map(_.getString(0)).sorted
+    manifestFiles(manifest(s, path, v))
 
   /** DELETION VECTORS — the O(deleted rows) erasure commit
     * ([[deleteCommitDv]]; round-13 verdict #2): a version's dv relation
@@ -121,13 +130,19 @@ object VersionedStore extends QueryPack {
     * orphan dv at slot v whose deletion never committed — it must stay
     * invisible to every read (its claim file blocks the slot from
     * re-use) until vacuum reclaims claim, staging and dv together. */
-  private[graft] def dvAt(s: SparkSession, path: String, v: Int): Option[DataFrame] = {
+  private[graft] def dvAt(s: SparkSession, path: String, v: Int): Option[DataFrame] =
+    dvVersionAt(s, path, v).map { k =>
+      val files = LocalParquet.ls(s, dvPath(path, k))
+      s.read.schema(LocalParquet.schema(s, files.head)).parquet(dvPath(path, k))
+    }
+
+  /** The dv commit [[dvAt]] resolves for version `v`. */
+  private def dvVersionAt(s: SparkSession, path: String, v: Int): Option[Int] = {
     val dvs = dvVersions(s, path)
     if (dvs.isEmpty) None
     else {
       val committed = versions(s, path).toSet
       dvs.filter(k => k <= v && committed(k)).lastOption
-        .map(k => s.read.parquet(dvPath(path, k)))
     }
   }
 
@@ -144,9 +159,26 @@ object VersionedStore extends QueryPack {
     * can list ZERO files (a purge that emptied the store): that version
     * reads as the empty store-typed frame. */
   def readVersion(s: SparkSession, path: String, v: Int): DataFrame = {
+    requireCommitted(s, path, v)
     val files = versionFiles(s, path, v)
     if (files.isEmpty) schemaCarrier(s, path, v)
     else applyDv(s, path, v, s.read.parquet(files.toIndexedSeq: _*))
+  }
+
+  /** Readers see only committed versions: on a txn-record store `v`'s
+    * commit marker must exist (one listing of `txn/v<N>`), on a
+    * manifest-only store its manifest. A crash after the manifest
+    * write but before the marker leaves a manifest that [[versions]]
+    * hides, and its slot is never reused — without this check a read
+    * naming that number would serve a version that never committed. */
+  private def requireCommitted(s: SparkSession, path: String, v: Int): Unit = {
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(s.sparkContext.hadoopConfiguration)
+    val committed =
+      if (fs.exists(new org.apache.hadoop.fs.Path(txnDir(path))))
+        TxnLog.isCommitted(fs, path, v)
+      else fs.exists(new org.apache.hadoop.fs.Path(manifestPath(path, v)))
+    require(committed, s"version $v of $path is not a committed version")
   }
 
   /** A ZERO-ROW frame carrying the store's schema — the empty-result
@@ -159,14 +191,20 @@ object VersionedStore extends QueryPack {
     * physically undiscoverable — the Delta/Iceberg equivalent keeps
     * schema in the log, which this layout does not). */
   private[graft] def schemaCarrier(s: SparkSession, path: String,
-      v: Int): DataFrame = {
-    val own = versionFiles(s, path, v)
+      v: Int): DataFrame =
+    LocalParquet.empty(s, storeSchema(s, path, v, versionFiles(s, path, v)))
+
+  /** The row schema [[schemaCarrier]] carries: the footer of the first
+    * of `own` (version `v`'s files), else of the newest retained
+    * version that still lists a file. */
+  private def storeSchema(s: SparkSession, path: String, v: Int,
+      own: Seq[String]): org.apache.spark.sql.types.StructType = {
     val src =
       if (own.nonEmpty) Some(own.head)
       else versions(s, path).reverseIterator
         .map(w => versionFiles(s, path, w)).find(_.nonEmpty).map(_.head)
     src match {
-      case Some(f) => s.read.parquet(f).limit(0)
+      case Some(f) => LocalParquet.schema(s, LocalParquet.status(s, Seq(f)).head)
       case None => throw new IllegalStateException(
         s"store at $path lists no data file in any retained version — " +
           "its row schema is undiscoverable, so an empty read cannot be " +
@@ -482,20 +520,20 @@ object VersionedStore extends QueryPack {
 
   /** (batch_id from the marker name, commit_ts from the txn record —
     * marker mtime when a pre-commit_ts record lacks the column) of a
-    * committed version: one listing + one tiny parquet read. */
+    * committed version: one listing + one tiny driver-side parquet
+    * read, no Spark job. */
   private def readTxnMeta(s: SparkSession, path: String, v: Int): (Long, Long) = {
     val fs = new org.apache.hadoop.fs.Path(txnDir(path))
       .getFileSystem(s.sparkContext.hadoopConfiguration)
     val markers = TxnLog.markers(fs, path, v)
     val bid = markers.map(_._1).max
-    val recs = hadoopLs(s, txnPath(path, v))
+    val markerTs = markers.map(_._2.getModificationTime).max
     val ts =
-      if (recs.isEmpty) markers.map(_._2.getModificationTime).max
+      if (LocalParquet.ls(s, txnPath(path, v)).isEmpty) markerTs
       else {
-        val df = s.read.parquet(recs.toIndexedSeq: _*)
-        if (df.columns.contains("commit_ts"))
-          df.select(max(col("commit_ts"))).head().getLong(0)
-        else markers.map(_._2.getModificationTime).max
+        val rec = LocalParquet.table(s, txnPath(path, v))
+        if (!rec.has("commit_ts") || rec.rows.isEmpty) markerTs
+        else rec.rows.map(_.getAs[Long]("commit_ts")).max
       }
     (bid, ts)
   }
@@ -925,7 +963,7 @@ object VersionedStore extends QueryPack {
           // rows) — one scan of the just-written, still-cached files;
           // inheriting the original's bloom would be a correct
           // over-approximation but its ROW COUNT would not be
-          if (readBlooms(s, path).isDefined) {
+          if (LocalParquet.ls(s, bloomsDir(path)).nonEmpty) {
             val foldFiles = mapping.values.flatten.toSeq.sorted
             appendBlooms(s, path, foldFiles, keyCol)
           }
@@ -1117,19 +1155,28 @@ object VersionedStore extends QueryPack {
     * against a long-keyed store hashes into a disjoint long space, the
     * blooms admit nothing, and the erasure SILENTLY no-ops — worse than
     * the old loud rejection (round-15 verdict #2's hazard). Costs one
-    * schema-carrier footer read, on planning paths that read manifests
-    * anyway. */
+    * driver-side manifest read and one footer read — no Spark job. */
   private[graft] def requireKeyClassMatch(s: SparkSession, path: String,
       v: Int, keys: DataFrame, keyCol: String): Unit =
-    requireKeyType(schemaCarrier(s, path, v).schema(keyCol).dataType,
-      keys, keyCol)
+    requireKeyType(storeSchema(s, path, v, versionFiles(s, path, v))(keyCol)
+      .dataType, keys, keyCol)
 
   /** [[requireKeyClassMatch]] typed off `file`, a member file of the
     * version the caller already holds from its manifest — the same
-    * check without a second manifest read. */
+    * check on one footer read, without a second manifest read. Returns
+    * that footer's row schema, so the caller's Spark reads of the
+    * version's files need no schema-inference job. */
   private[graft] def requireKeyClassMatch(s: SparkSession, file: String,
-      keys: DataFrame, keyCol: String): Unit =
-    requireKeyType(s.read.parquet(file).schema(keyCol).dataType, keys, keyCol)
+      keys: DataFrame, keyCol: String): org.apache.spark.sql.types.StructType = {
+    val st = fileSchema(s, file)
+    requireKeyType(st(keyCol).dataType, keys, keyCol)
+    st
+  }
+
+  /** The row schema of `file`'s footer, as inference yields it. */
+  private[graft] def fileSchema(s: SparkSession,
+      file: String): org.apache.spark.sql.types.StructType =
+    LocalParquet.schema(s, LocalParquet.status(s, Seq(file)).head)
 
   private def requireKeyType(storeDt: org.apache.spark.sql.types.DataType,
       keys: DataFrame, keyCol: String): Unit = {
@@ -1162,27 +1209,30 @@ object VersionedStore extends QueryPack {
     * writer. */
   private[graft] def fileKeyStats(s: SparkSession, path: String, v: Int,
       keyCol: String): Array[(String, Long, Long)] = {
-    val mf = s.read.parquet(manifestPath(path, v))
-    if (mf.columns.contains("mn") && mf.columns.contains("mx"))
-      mf.select(col("file"), col("mn"), col("mx")).collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-    else {
-      val files = mf.select(col("file")).collect().map(_.getString(0))
+    val mf = manifest(s, path, v)
+    manifestBands(mf).getOrElse {
+      val files = manifestFiles(mf)
       if (files.isEmpty) Array.empty
       else {
-        val data = s.read.parquet(files.toIndexedSeq: _*)
-        val rebuilt = data
-          .groupBy(input_file_name().as("file"))
-          .agg(min(keyLong(data, keyCol)).as("mn"),
-            max(keyLong(data, keyCol)).as("mx"))
-          .collect()
-          .map(r => (canon(r.getString(0)), r.getLong(1), r.getLong(2)))
+        val rebuilt = keyBands(s, files, keyCol)
         import s.implicits._
         rebuilt.sortBy(_._1).toSeq.toDF("file", "mn", "mx")
           .coalesce(1).write.mode(SaveMode.Overwrite).parquet(manifestPath(path, v))
         rebuilt
       }
     }
+  }
+
+  /** Per file of `files`: (canonical file, mn, mx) of its keys in long
+    * space — one Spark aggregate, typed off the first file's footer, so
+    * no schema-inference job runs. */
+  private[graft] def keyBands(s: SparkSession, files: Seq[String],
+      keyCol: String): Array[(String, Long, Long)] = {
+    val data = s.read.schema(fileSchema(s, files.head)).parquet(files: _*)
+    data.groupBy(input_file_name().as("file"))
+      .agg(min(keyLong(data, keyCol)).as("mn"), max(keyLong(data, keyCol)).as("mx"))
+      .collect()
+      .map(r => (canon(r.getString(0)), r.getLong(1), r.getLong(2)))
   }
 
   /** Per-FILE key blooms as a shared SIDE relation (file, bloom) —
@@ -1201,6 +1251,26 @@ object VersionedStore extends QueryPack {
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) None
     else Some(s.read.parquet(bloomsDir(path)).dropDuplicates("file"))
+  }
+
+  /** The bloom side relation read on the driver; None when the store
+    * has none. */
+  private def bloomRelation(s: SparkSession, path: String): Option[LocalParquet.Table] =
+    if (LocalParquet.ls(s, bloomsDir(path)).isEmpty) None
+    else Some(LocalParquet.table(s, bloomsDir(path)))
+
+  /** file -> sealed bloom, the first entry per file (a file's bloom
+    * never changes). */
+  private def bloomsByFile(s: SparkSession, path: String): Map[String, Array[Byte]] =
+    bloomRelation(s, path).fold(Map.empty[String, Array[Byte]])(_.rows.reverseIterator
+      .map(r => r.getAs[String]("file") -> r.getAs[Array[Byte]]("bloom")).toMap)
+
+  /** `bands` joined on the driver with their blooms: (file, mn, mx,
+    * bloom or null — a null bloom fails open to might-contain). */
+  private def withBlooms(s: SparkSession, path: String,
+      bands: Array[(String, Long, Long)]): Array[(String, Long, Long, Array[Byte])] = {
+    val blooms = bloomsByFile(s, path)
+    bands.map { case (f, mn, mx) => (f, mn, mx, blooms.getOrElse(f, null)) }
   }
 
   /** Compute and append blooms + exact ROW COUNTS for `files` (one
@@ -1230,15 +1300,11 @@ object VersionedStore extends QueryPack {
     * None when any member file lacks an entry (pre-heal store) — the
     * fold trigger then stays off rather than guessing. */
   private def storeRowsOf(s: SparkSession, path: String, v: Int): Option[Long] =
-    readBlooms(s, path).flatMap { bl =>
-      if (!bl.columns.contains("rows")) None
-      else {
-        val byFile = bl.select(col("file"), col("rows")).collect()
-          .map(r => (r.getString(0), r.getLong(1))).toMap
-        val files = versionFiles(s, path, v)
-        val counts = files.flatMap(byFile.get)
-        if (counts.length == files.length) Some(counts.sum) else None
-      }
+    bloomRelation(s, path).filter(_.has("rows")).flatMap { bl =>
+      val byFile = bl.rows.map(r => (r.getAs[String]("file"), r.getAs[Long]("rows"))).toMap
+      val files = versionFiles(s, path, v)
+      val counts = files.flatMap(byFile.get)
+      if (counts.length == files.length) Some(counts.sum) else None
     }
 
   /** BLOOM-extended per-file stats of version `v` as a broadcast-ready
@@ -1255,15 +1321,9 @@ object VersionedStore extends QueryPack {
       keyCol: String): DataFrame = {
     import s.implicits._
     val bands = fileKeyStats(s, path, v, keyCol)
-    val bandsDf = bands.toSeq.toDF("file", "mn", "mx")
-    val have = readBlooms(s, path)
-      .map(_.select(col("file")).collect().map(_.getString(0)).toSet)
-      .getOrElse(Set.empty)
+    val have = bloomsByFile(s, path).keySet
     appendBlooms(s, path, bands.map(_._1).filterNot(have).toIndexedSeq, keyCol)
-    val blooms = readBlooms(s, path)
-      .getOrElse(Seq.empty[(String, Array[Byte])].toDF("file", "bloom"))
-    bandsDf.join(blooms, Seq("file"), "left_outer")
-      .select(col("file"), col("mn"), col("mx"), col("bloom"))
+    withBlooms(s, path, bands).toSeq.toDF("file", "mn", "mx", "bloom")
   }
 
   /** Band+bloom owning-file prune shared by every key-batch planner
@@ -1353,18 +1413,16 @@ object VersionedStore extends QueryPack {
     * scanning their candidate set. */
   private[graft] def fileKeyStatsReadOnly(s: SparkSession, path: String,
       v: Int): Option[DataFrame] = {
-    val mf = s.read.parquet(manifestPath(path, v))
-    if (!(mf.columns.contains("mn") && mf.columns.contains("mx"))) None
-    else {
-      val base = mf.select(col("file"), col("mn"), col("mx"))
-      Some(readBlooms(s, path) match {
-        case None => base.withColumn("bloom", lit(null).cast("binary"))
-        case Some(b) => base.join(b.select(col("file"), col("bloom")),
-          Seq("file"), "left_outer")
-          .select(col("file"), col("mn"), col("mx"), col("bloom"))
-      })
-    }
+    import s.implicits._
+    keyStatsReadOnly(s, path, manifest(s, path, v))
+      .map(_.toSeq.toDF("file", "mn", "mx", "bloom"))
   }
+
+  /** The rows behind [[fileKeyStatsReadOnly]], joined on the driver:
+    * (file, mn, mx, bloom or null) per band of manifest `m`. */
+  private def keyStatsReadOnly(s: SparkSession, path: String,
+      m: LocalParquet.Table): Option[Array[(String, Long, Long, Array[Byte])]] =
+    manifestBands(m).map(withBlooms(s, path, _))
 
   /** MULTI-KEY POINT READ — the subject-access-request verb (the read
     * twin of the erasure family: before a subject's rows are purged,
@@ -1373,26 +1431,132 @@ object VersionedStore extends QueryPack {
     * owning files ([[fileKeyStatsReadOnly]] — a READ path: no heal, no
     * bloom append; a store without stats fails open to the full
     * manifest, never wrong). The version's deletion vector applies as
-    * on any read. Cost at 100 TB: a k-key request opens the handful of
-    * files whose band AND bloom admit a key — a scattered batch no
-    * longer reads every in-range file (round-14 missing #4, surfaced
-    * as a user-facing read). */
+    * on any read, and `v` must be committed. Cost at 100 TB: a k-key
+    * request opens the handful of files whose band AND bloom admit a
+    * key — a scattered batch no longer reads every in-range file
+    * (round-14 missing #4, surfaced as a user-facing read).
+    *
+    * The metadata — the manifest, the bloom side relation, the key-type
+    * footer — is read on the driver, with no Spark job. A literal key
+    * list (a key frame whose optimized plan is a `LocalRelation`, such
+    * as `Seq(k).toDF` or `graft_export`'s list) is also pruned on the
+    * driver, by the same [[keyAsLong]] image and the same band and
+    * bloom tests. When its owning files plus the version's dv files
+    * total at most `spark.sql.autoBroadcastJoinThreshold` (the session's
+    * "small enough to bring to the driver" size; -1 turns this off),
+    * they are read on the driver too: the probe runs no Spark job, and
+    * the frame's scan reports the files it opened. Any other key frame,
+    * or a larger owning set, plans as a Spark semi-join over the owning
+    * files after a broadcast prune join. */
   def readKeys(s: SparkSession, path: String, v: Int, keys: DataFrame,
       keyCol: String): DataFrame = {
-    val files = versionFiles(s, path, v)
+    requireCommitted(s, path, v)
     requireSupportedKey(keys, keyCol)
-    if (files.nonEmpty) requireKeyClassMatch(s, files.head, keys, keyCol)
+    val m = manifest(s, path, v)
+    val files = manifestFiles(m)
+    val headSchema = files.headOption.map(fileSchema(s, _))
+    headSchema.foreach(h => requireKeyType(h(keyCol).dataType, keys, keyCol))
+    val local = localKeys(s, keys, keyCol)
     val owning: Seq[String] =
       if (files.isEmpty) Nil // a purge can empty a committed manifest
-      else fileKeyStatsReadOnly(s, path, v) match {
+      else keyStatsReadOnly(s, path, m) match {
         case None => files.toSeq
-        case Some(st) => owningFilesFor(keys, st, keyCol)
+        case Some(st) => local match {
+          case Some(ks) =>
+            val images = ks.flatMap(_._2)
+            st.collect { case (f, mn, mx, bloom) if images.exists(k =>
+              k >= mn && k <= mx && KeyBloom.mightContain(bloom, k)) => f }
+              .toSeq.distinct.sorted
+          case None =>
+            import s.implicits._
+            owningFilesFor(keys, st.toSeq.toDF("file", "mn", "mx", "bloom"), keyCol)
+        }
       }
-    val base =
-      if (owning.isEmpty) schemaCarrier(s, path, v)
-      else s.read.parquet(owning: _*)
-    applyDv(s, path, v,
-      base.join(keys.select(col(keyCol)).distinct(), Seq(keyCol), "left_semi"))
+    local.flatMap(readKeysOnDriver(s, path, v, files, headSchema, owning, _, keyCol))
+      .getOrElse {
+        val wanted = keys.select(col(keyCol)).distinct()
+        if (owning.isEmpty)
+          LocalParquet.empty(s, storeSchema(s, path, v, files))
+            .join(wanted, Seq(keyCol), "left_semi")
+        else applyDv(s, path, v,
+          s.read.parquet(owning: _*).join(wanted, Seq(keyCol), "left_semi"))
+      }
+  }
+
+  /** A literal key list on the driver: per row, the key's value (null
+    * for a null key) and its [[keyAsLong]] image, computed by the same
+    * expression the Spark prune runs. None unless `keys` plans to a
+    * `LocalRelation` and the session's broadcast threshold is on. */
+  private def localKeys(s: SparkSession, keys: DataFrame,
+      keyCol: String): Option[Seq[(Any, Option[Long])]] = {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    def local(df: DataFrame) = df.queryExecution.optimizedPlan match {
+      case lr: LocalRelation => Some(lr.data)
+      case _ => None
+    }
+    if (s.sessionState.conf.autoBroadcastJoinThreshold < 0 ||
+        local(keys).isEmpty) None
+    else {
+      val value = keyValue(keys.schema(keyCol).dataType)
+      local(keys.select(col(keyCol), keyLong(keys, keyCol))).map(_.map(r =>
+        (if (r.isNullAt(0)) null else value(r, 0),
+          if (r.isNullAt(1)) None else Some(r.getLong(1)))))
+    }
+  }
+
+  /** A key cell as a driver-side set member, in the key space the
+    * semi-join compares in: integral keys widen to long, strings and
+    * binaries compare by content. */
+  private def keyValue(dt: org.apache.spark.sql.types.DataType)
+      : (org.apache.spark.sql.catalyst.InternalRow, Int) => Any = {
+    import org.apache.spark.sql.types._
+    dt match {
+      case LongType | IntegerType | ShortType | ByteType =>
+        (r, i) => r.get(i, dt).asInstanceOf[Number].longValue
+      case StringType => (r, i) => r.getUTF8String(i).toString
+      case BinaryType => (r, i) => java.nio.ByteBuffer.wrap(r.getBinary(i))
+      case other => throw new IllegalArgumentException(
+        s"unsupported store key type $other")
+    }
+  }
+
+  /** [[readKeys]] served on the driver: the `owning` files' rows whose
+    * key is in `keys` (a null key never matches, as in the semi-join),
+    * minus the version's dv keys, with the semi-join's column order
+    * (key first). None when the owning and dv files outgrow the
+    * session's broadcast threshold. */
+  private def readKeysOnDriver(s: SparkSession, path: String, v: Int,
+      files: Seq[String], headSchema: Option[org.apache.spark.sql.types.StructType],
+      owning: Seq[String], keys: Seq[(Any, Option[Long])],
+      keyCol: String): Option[DataFrame] = {
+    import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+    import org.apache.spark.sql.catalyst.types.DataTypeUtils
+    val owningSt = LocalParquet.status(s, owning)
+    val dvSt = if (owning.isEmpty) Nil else dvVersionAt(s, path, v)
+      .map(k => LocalParquet.ls(s, dvPath(path, k))).getOrElse(Nil)
+    val opened = owningSt ++ dvSt
+    val dvSchema = dvSt.headOption.map(LocalParquet.schema(s, _))
+    if (opened.map(_.getLen).sum > s.sessionState.conf.autoBroadcastJoinThreshold ||
+        dvSchema.exists(_.fieldNames.toSeq != Seq(keyCol))) return None
+    val schema =
+      if (owning.isEmpty) storeSchema(s, path, v, files)
+      else if (files.headOption.contains(owning.head)) headSchema.get
+      else LocalParquet.schema(s, owningSt.head)
+    val ki = schema.fieldIndex(keyCol)
+    val value = keyValue(schema(ki).dataType)
+    val wanted = keys.collect { case (k, _) if k != null => k }.toSet
+    val purged: Set[Any] = dvSchema.map { ds =>
+      val dvValue = keyValue(ds(0).dataType)
+      LocalParquet.scan(s, dvSt, ds)(!_.isNullAt(0)).map(dvValue(_, 0)).toSet
+    }.getOrElse(Set.empty)
+    val rows = LocalParquet.scan(s, owningSt, schema) { r =>
+      !r.isNullAt(ki) && { val k = value(r, ki); wanted(k) && !purged(k) }
+    }
+    val attrs = DataTypeUtils.toAttributes(schema)
+    val out = attrs(ki) +: attrs.patch(ki, Nil, 1)
+    val reorder = UnsafeProjection.create(out, attrs)
+    Some(LocalParquet.frame(s, out, rows.map(reorder(_).copy()),
+      opened.map(_.getPath.toUri.toString)))
   }
 
   /** ERASURE EXECUTION — the copy-on-write DELETE commit closing the
@@ -1492,14 +1656,7 @@ object VersionedStore extends QueryPack {
           // in executor cache from the rewrite); shared files keep both
           val newStats =
             if (newFiles.isEmpty) Array.empty[(String, Long, Long)]
-            else {
-              val nd = s.read.parquet(newFiles.toIndexedSeq: _*)
-              nd.groupBy(input_file_name().as("file"))
-                .agg(min(keyLong(nd, keyCol)).as("mn"),
-                  max(keyLong(nd, keyCol)).as("mx"))
-            }
-              .collect()
-              .map(r => (canon(r.getString(0)), r.getLong(1), r.getLong(2)))
+            else keyBands(s, newFiles.toSeq.sorted, keyCol)
           appendBlooms(s, path, newFiles.toSeq.sorted, keyCol)
           ColStats.onCommit(s, path, newFiles.toSeq.sorted)
           (sharedStats.map(t => (t._1, t._2, t._3)) ++ newStats).sortBy(_._1)

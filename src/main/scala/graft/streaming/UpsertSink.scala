@@ -34,12 +34,17 @@ import org.apache.spark.storage.StorageLevel
   * releases both on every exit (commit, replay skip, empty batch, lost
   * race, exception); emptiness, key band and key count come from one
   * aggregate over the persisted keys, and the CDC write is sized from
-  * that count instead of counting the diff. What remains per trigger
-  * is the fold once, then mostly small metadata jobs: the txn-tip and
-  * parent-manifest reads, a key-type check on one parent file's
-  * footer, the owning-file join, the rewrite of the touched files, the
-  * read-back of the new files' key bands, and the manifest, CDC and
-  * txn writes.
+  * that count instead of counting the diff.
+  *
+  * Store metadata costs no Spark job: the txn tip and replay check are
+  * filesystem listings, and the parent manifest, the key-type check on
+  * one parent file's footer and the metadata checkpoint's txn records
+  * are read on the driver ([[graft.sources.LocalParquet]]). The Spark
+  * reads of store files are typed off that footer, so none runs a
+  * schema-inference job. What remains per trigger is the fold once,
+  * the key aggregate, the owning-file join, the rewrite of the touched
+  * files, the read-back of the new files' key bands, and the manifest,
+  * CDC and txn writes.
   */
 /** The upsert manifest row: member file + its key band. The extra
   * stats columns ride alongside [[VersionedStore]]'s `file` column, so
@@ -59,21 +64,22 @@ object UpsertSink {
     VersionedStore.readVersion(s, path, vs.max)
   }
 
-  /** SCALE NOTE (round-12 verdict): the collect below is bounded by the
+  /** Version `v`'s per-file key bands. The manifest is read on the
+    * driver (one listing and one small file, no Spark job), and the
+    * bands live there as plain rows.
+    *
+    * SCALE NOTE (round-12 verdict): those rows are bounded by the
     * store's FILE COUNT — the table-format norm (Delta/Iceberg hold
     * manifests driver-side between checkpoints), fine to O(10^4) files.
-    * A store whose manifest outgrows a driver broadcast moves to the
+    * A store whose manifest outgrows the driver moves to the
     * ManifestStore precedent: keep the stats as a DataFrame, run the
     * band-overlap prune cluster-side, and collect only the SELECTED
     * paths; the new manifest then writes as parent-anti-join ∪
     * new-stats without materializing the full file list on the driver. */
   private def statsManifest(s: SparkSession, path: String, v: Int,
       keyCol: String): Array[FileStats] = {
-    import s.implicits._
-    val mf = s.read.parquet(VersionedStore.manifestPath(path, v))
-    if (mf.columns.contains("mn") && mf.columns.contains("mx"))
-      mf.select(col("file"), col("mn"), col("mx")).as[FileStats].collect()
-    else {
+    val mf = VersionedStore.manifest(s, path, v)
+    VersionedStore.manifestBands(mf).getOrElse {
       // SELF-HEAL: a maintenance compaction (VersionedStore.compactCommit
       // / CALL graft_store_optimize) writes a file-only manifest — without
       // this branch the next micro-batch's stats read would crashloop the
@@ -82,18 +88,10 @@ object UpsertSink {
       // back into its manifest, so the rebuild cost (one read of the
       // compacted files) is paid only between a compaction and the next
       // commit, never steadily.
-      val files = mf.select(col("file")).as[String].collect()
+      val files = VersionedStore.manifestFiles(mf)
       if (files.isEmpty) Array.empty
-      else {
-        val data = s.read.parquet(files.toIndexedSeq: _*)
-        data.groupBy(input_file_name().as("file"))
-          .agg(min(VersionedStore.keyLong(data, keyCol)).as("mn"),
-            max(VersionedStore.keyLong(data, keyCol)).as("mx"))
-      }
-        .collect()
-        .map(r => FileStats(VersionedStore.canon(r.getString(0)),
-          r.getLong(1), r.getLong(2)))
-    }
+      else VersionedStore.keyBands(s, files.toSeq, keyCol)
+    }.map(FileStats.tupled)
   }
 
   /** The prune (and the COW rewrite decision) compares key bands in
@@ -141,11 +139,11 @@ object UpsertSink {
     // the store): no prior rows, same contract as no-store-yet —
     // read.parquet over an empty path list would throw instead
     if (parent.isEmpty) return None
-    VersionedStore.requireKeyClassMatch(s, parent.head.file, keys, keyCol)
+    val schema = VersionedStore.requireKeyClassMatch(s, parent.head.file, keys, keyCol)
     val owning = owningFiles(keys, parent, keyCol)
     val files = if (owning.nonEmpty) owning
       else parent.map(_.file).take(1) // schema carrier, filtered empty
-    val df = s.read.parquet(files.toIndexedSeq: _*)
+    val df = s.read.schema(schema).parquet(files.toIndexedSeq: _*)
     Some(if (owning.nonEmpty) df else df.filter(lit(false)))
   }
 
@@ -229,8 +227,10 @@ object UpsertSink {
       // collecting only distinct FILE NAMES (file-count bounded).
       val parent: Array[FileStats] = latest
         .map(pv => statsManifest(s, path, pv, keyCol)).getOrElse(Array.empty)
-      if (parent.nonEmpty)
-        VersionedStore.requireKeyClassMatch(s, parent.head.file, batch, keyCol)
+      // the parent's row schema, off one footer: the Spark reads of its
+      // files below need no schema-inference job
+      val parentSchema = parent.headOption.map(f =>
+        VersionedStore.requireKeyClassMatch(s, f.file, batch, keyCol))
       val owning: Array[String] = owningFiles(allKeys, parent, keyCol)
       Some { v =>
         // Rewrite = touched files' survivors + the batch (keyed replace:
@@ -238,7 +238,7 @@ object UpsertSink {
         // keys contribute to the anti-join but no replacement rows).
         val rewritten =
           if (owning.isEmpty) batch
-          else s.read.parquet(owning.toIndexedSeq: _*)
+          else s.read.schema(parentSchema.get).parquet(owning.toIndexedSeq: _*)
             .join(allKeys, Seq(keyCol), "left_anti")
             .unionByName(batch)
         val parts = math.max(1, if (owning.isEmpty) initialPartitions else owning.length)
@@ -279,7 +279,7 @@ object UpsertSink {
             }
           commitParent.foreach { parentStats =>
             publish(batch, allKeys, path, v, settled, dataDir, keyCol,
-              parentStats, owning, keys)
+              parentStats, owning, parentSchema, keys)
           }
           commitParent.isDefined
         }
@@ -292,27 +292,21 @@ object UpsertSink {
   private def publish(batch: DataFrame, allKeys: DataFrame, path: String,
       v: Int, settled: Option[Int], dataDir: String, keyCol: String,
       parentStats: Array[FileStats], owning: Array[String],
+      parentSchema: Option[org.apache.spark.sql.types.StructType],
       keys: BatchKeys): Unit = {
     val s = batch.sparkSession
     // Stats for the new files: a read-back of ONLY the files this
-    // commit wrote (O(batch)), grouped by physical file.
+    // commit wrote (O(batch)), grouped by physical file, typed off one
+    // new file's footer.
     // a merge whose every touched row was deleted writes no files
-    val newFiles = VersionedStore.hadoopLs(s, dataDir)
-    val newStats = if (newFiles.isEmpty) Array.empty[FileStats] else {
-      val newData = s.read.parquet(newFiles.toIndexedSeq: _*)
-      newData
-        .groupBy(input_file_name().as("file"))
-        .agg(min(VersionedStore.keyLong(newData, keyCol)).as("mn"),
-          max(VersionedStore.keyLong(newData, keyCol)).as("mx"))
-        .collect()
-        .map(r => FileStats(VersionedStore.canon(r.getString(0)),
-          r.getLong(1), r.getLong(2)))
-    }
+    val newFiles = VersionedStore.hadoopLs(s, dataDir).toSeq.sorted
+    val newStats = if (newFiles.isEmpty) Array.empty[FileStats]
+      else VersionedStore.keyBands(s, newFiles, keyCol).map(FileStats.tupled)
 
     val ownSet = owning.toSet
     writeManifest(s, path, v,
       parentStats.filterNot(fs => ownSet(fs.file)).toSeq ++ newStats)
-    graft.sources.ColStats.onCommit(s, path, newFiles.toSeq.sorted)
+    graft.sources.ColStats.onCommit(s, path, newFiles)
     // write-path CDC (round 15): classify the batch against the
     // pre-images it replaced — MINUS the parent's deletion vector
     // (a dv-erased key's physical leftover is not a pre-image; its
@@ -326,7 +320,7 @@ object UpsertSink {
       if (owning.isEmpty)
         batch.withColumn("_change_type", lit("insert"))
       else {
-        val preRaw = s.read.parquet(owning.toIndexedSeq: _*)
+        val preRaw = s.read.schema(parentSchema.get).parquet(owning.toIndexedSeq: _*)
           .join(allKeys, Seq(keyCol), "left_semi")
         val pre = parentDv.fold(preRaw)(dv =>
           preRaw.join(broadcast(dv), dv.columns.toSeq, "left_anti"))

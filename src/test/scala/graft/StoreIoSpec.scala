@@ -211,4 +211,48 @@ class StoreIoSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("reads refuse a version whose commit crashed at its marker") {
+    val path = tmp("uncommitted")
+    val esc = path.replace("'", "''")
+    UpsertSink.upsertBatch(kv((1L to 20L).map(k => (k, 0L))), path, 0L, "key")
+    val commit = (p: String) => UpsertSink.upsertBatch(
+      kv((11L to 30L).map(k => (k, 1L))), p, 1L, "key", settleTimeoutMs = 500L)
+    // the marker is the commit: crash exactly there, after the manifest
+    val clean = tmp("uncommitted_clean")
+    UpsertSink.upsertBatch(kv((1L to 20L).map(k => (k, 0L))), clean, 0L, "key")
+    val rec = new Recording
+    StoreIo.withOps(rec)(commit(clean))
+    val k = rec.events.indexWhere(e => e._1 == "marker" && e._2.endsWith(".marker")) + 1
+    assert(k > 0, s"no commit marker among ${rec.events}")
+    intercept[Exception](StoreIo.withOps(new Crashing(k))(commit(path)))
+    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.exists(new Path(VersionedStore.manifestPath(path, 2))),
+      "the crash left no uncommitted manifest to serve")
+    assert(VersionedStore.versions(spark, path) == Seq(1))
+    def refused(read: => Any): Unit = {
+      val e = intercept[Throwable](read)
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("not a committed version")),
+        s"unexpected failure: $e")
+    }
+    refused(VersionedStore.readVersion(spark, path, 2).collect())
+    refused(VersionedStore.readKeys(spark, path, 2, Seq(11L).toDF("key"), "key")
+      .collect())
+    refused(spark.sql(s"SELECT * FROM graft_snapshot('$esc', 2)").collect())
+    refused(spark.sql(s"SELECT * FROM graft_export('$esc', 2, 'key', '11,12')")
+      .collect())
+    // the committed parent still reads, through every entry point
+    assert(VersionedStore.readVersion(spark, path, 1).count() == 20)
+    assert(spark.sql(s"SELECT * FROM graft_export('$esc', 1, 'key', '11,12')")
+      .count() == 2)
+    // a manifest-only store: the manifest is the commit
+    val batchBuilt = tmp("uncommitted_manifest_only")
+    spark.range(5).toDF("key").write.parquet(VersionedStore.dataPath(batchBuilt))
+    VersionedStore.writeManifest(spark, batchBuilt, 1,
+      VersionedStore.hadoopLs(spark, VersionedStore.dataPath(batchBuilt)))
+    assert(VersionedStore.readVersion(spark, batchBuilt, 1).count() == 5)
+    refused(VersionedStore.readVersion(spark, batchBuilt, 2))
+    refused(VersionedStore.readKeys(spark, batchBuilt, 2, Seq(1L).toDF("key"), "key"))
+  }
 }
