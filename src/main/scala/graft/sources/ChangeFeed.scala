@@ -226,8 +226,12 @@ object ChangeFeed extends QueryPack {
 
   /** Row-grain keyed diff of one commit's pre/post images. Schemas are
     * aligned by name first (evolution adds columns as null on the old
-    * side), then compared as one null-safe struct per side. Shared with
-    * the keyed upsert sink's write-path CDC classifier. */
+    * side), then compared as one null-safe struct per side. One pass:
+    * a single full outer join, minus the keys whose two sides are
+    * null-safe equal, each surviving key exploded into its one or two
+    * tagged change rows (`insert`, `delete`, or an
+    * `update_preimage`/`update_postimage` pair). Shared with the keyed
+    * upsert sink's write-path CDC classifier. */
   private[graft] def keyedDiff(pre: DataFrame, post: DataFrame,
       keyCol: String): DataFrame = {
     val cols = (pre.columns ++ post.columns).distinct.filterNot(_ == keyCol)
@@ -237,21 +241,19 @@ object ChangeFeed extends QueryPack {
         if (have(c)) col(c) else lit(null).as(c))
       df.select(col(keyCol), struct(fields.toIndexedSeq: _*).as(tag))
     }
-    val j = aligned(pre, "_pre").join(aligned(post, "_post"),
-      Seq(keyCol), "full_outer")
-    def expand(row: String, ct: String) = {
-      val dataCols = cols.map(c => col(row).getField(c).as(c))
-      Seq(col(keyCol)) ++ dataCols :+ lit(ct).as(ChangeType)
-    }
-    val ins = j.filter(col("_pre").isNull)
-      .select(expand("_post", "insert"): _*)
-    val del = j.filter(col("_post").isNull)
-      .select(expand("_pre", "delete"): _*)
-    val chg = j.filter(col("_pre").isNotNull && col("_post").isNotNull &&
-      !(col("_pre") <=> col("_post")))
-    val upPre = chg.select(expand("_pre", "update_preimage"): _*)
-    val upPost = chg.select(expand("_post", "update_postimage"): _*)
-    ins.unionAll(del).unionAll(upPre).unionAll(upPost)
+    def tagged(side: String, ct: String) =
+      struct(cols.map(c => col(side).getField(c).as(c)).toIndexedSeq :+
+        lit(ct).as(ChangeType): _*)
+    val change = "_change"
+    aligned(pre, "_pre").join(aligned(post, "_post"), Seq(keyCol), "full_outer")
+      .filter(!(col("_pre") <=> col("_post")))
+      .select(col(keyCol), explode(
+        when(col("_pre").isNull, array(tagged("_post", "insert")))
+          .when(col("_post").isNull, array(tagged("_pre", "delete")))
+          .otherwise(array(tagged("_pre", "update_preimage"),
+            tagged("_post", "update_postimage")))).as(change))
+      .select(col(keyCol) +: (cols :+ ChangeType).map(c =>
+        col(change).getField(c).as(c)).toIndexedSeq: _*)
   }
 
   /** q120: the change feed of the full q107/q109 lineage — append (v2),

@@ -1,9 +1,13 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.LogicalTypeAnnotation.IntLogicalTypeAnnotation
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{INT32, INT64}
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge, Row, SparkSession}
@@ -28,7 +32,11 @@ import org.apache.spark.sql.types.StructType
   * yields) are Spark's, so a relation reads the same either way.
   *
   * Nothing read here is cached: every call lists, opens and decodes
-  * afresh, so a reader always sees the files as they are now. */
+  * afresh, so a reader always sees the files as they are now.
+  *
+  * [[write]] is the twin for driver-held metadata: the rows go through
+  * Spark's own parquet output writer, so the file is the one a
+  * `coalesce(1).write.parquet` would leave, without the job. */
 object LocalParquet {
 
   /** A small parquet table read whole: its schema and rows. */
@@ -104,6 +112,66 @@ object LocalParquet {
     val sch = schema(s, files.head)
     val toRow = CatalystTypeConverters.createToScalaConverter(sch)
     Table(sch, scan(s, files, sch)(_ => true).map(r => toRow(r).asInstanceOf[Row]))
+  }
+
+  /** Per row group of `file` that holds rows: the (min, max) of the
+    * top-level integral column `c` from the footer's column-chunk
+    * statistics. None for a row group whose chunk has no usable
+    * statistics: absent, no non-null value, or a physical type whose
+    * statistics do not order as signed integers. One footer read. */
+  def integralBounds(s: SparkSession, file: FileStatus,
+      c: String): Seq[Option[(Long, Long)]] = {
+    import scala.jdk.CollectionConverters._
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(file, s.sessionState.newHadoopConf()),
+      ParquetMetadataConverter.NO_FILTER)
+    footer.getBlocks.asScala.toSeq.filter(_.getRowCount > 0).map { b =>
+      b.getColumns.asScala.find(_.getPath.toArray.sameElements(Array(c)))
+        .filter { ch =>
+          val pt = ch.getPrimitiveType
+          (pt.getPrimitiveTypeName == INT32 || pt.getPrimitiveTypeName == INT64) &&
+            (pt.getLogicalTypeAnnotation match {
+              case null => true
+              case i: IntLogicalTypeAnnotation => i.isSigned
+              case _ => false
+            })
+        }
+        .map(_.getStatistics)
+        .filter(st => st != null && st.hasNonNullValue)
+        .map(st => (st.genericGetMin.asInstanceOf[Number].longValue,
+          st.genericGetMax.asInstanceOf[Number].longValue))
+    }
+  }
+
+  /** Write `t` as the one-file parquet table under `dir`, on the
+    * driver: the rows go through Spark's own output writer
+    * ([[ParquetFileFormat.prepareWrite]]) under the session's SQL and
+    * Hadoop conf, so the codec, the schema metadata and the nullability
+    * are what Spark's writer makes of `t.schema`. The file is written
+    * as a hidden temp, published with [[StoreIo.ops]]' rename, and
+    * `_SUCCESS` follows. Whatever `dir` held before goes only after the
+    * publish: a failure earlier leaves the old table readable. */
+  def write(s: SparkSession, dir: String, t: Table): Unit = {
+    val conf = s.sessionState.newHadoopConf()
+    val job = Job.getInstance(conf)
+    val factory = new ParquetFileFormat().prepareWrite(s, job, Map.empty, t.schema)
+    val ctx = new TaskAttemptContextImpl(job.getConfiguration, new TaskAttemptID(
+      new TaskID(new JobID("graft", 0), TaskType.MAP, 0), 0))
+    val d = new Path(dir)
+    val fs = d.getFileSystem(conf)
+    val stale = if (fs.exists(d)) fs.listStatus(d).toSeq else Nil
+    val name = s"part-00000-${java.util.UUID.randomUUID()}-c000" +
+      factory.getFileExtension(ctx)
+    val tmp = new Path(d, s".$name.tmp")
+    val w = factory.newInstance(tmp.toString, t.schema, ctx)
+    try {
+      val toInternal = CatalystTypeConverters.createToCatalystConverter(t.schema)
+      t.rows.foreach(r => w.write(toInternal(r).asInstanceOf[InternalRow]))
+    } finally w.close()
+    if (!StoreIo.ops.rename(fs, tmp, new Path(d, name)))
+      throw new java.io.IOException(s"could not publish $tmp as $name")
+    stale.foreach(st => fs.delete(st.getPath, true))
+    fs.create(new Path(d, "_SUCCESS"), true).close()
   }
 
   /** A zero-row frame of `schema`. */

@@ -301,9 +301,8 @@ object StoreLineage extends QueryPack {
     tag(s, srcPath, clonePinName(dstPath), srcV) // pin BEFORE any copy
     val fs = new org.apache.hadoop.fs.Path(dstPath)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
-    s.read.parquet(manifestPath(srcPath, srcV))
-      .coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(manifestPath(dstPath, 1))
+    VersionedStore.writeManifest(s, dstPath, 1,
+      VersionedStore.manifest(s, srcPath, srcV))
     VersionedStore.dvAt(s, srcPath, srcV).foreach(d =>
       d.coalesce(1).write.mode(SaveMode.Overwrite)
         .parquet(VersionedStore.dvPath(dstPath, 1)))

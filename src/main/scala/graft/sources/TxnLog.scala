@@ -1,7 +1,8 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** THE COMMIT LOOP — the one optimistic protocol every versioned
   * committer runs (stream append, COW upsert/MERGE, COW and dv delete,
@@ -157,9 +158,15 @@ object TxnLog {
   private def batchIds(fs: FileSystem, path: String, v: Int): Seq[Long] =
     markers(fs, path, v).map(_._1)
 
+  private val RecordSchema = StructType(Seq(
+    StructField("batch_id", LongType, nullable = false),
+    StructField("commit_ts", LongType, nullable = false),
+    StructField("operation", StringType)))
+
   /** Commit slot `v`: the one-row `(batch_id, commit_ts, operation)`
-    * parquet, then the marker LAST — its single atomic create is the
-    * commit (a crash anywhere earlier leaves an uncommitted leftover),
+    * parquet, written on the driver ([[LocalParquet.write]], no job),
+    * then the marker LAST — its single atomic create is the commit (a
+    * crash anywhere earlier leaves an uncommitted leftover),
     * and its name carries the batch id, so replay checks and the
     * batchId → version map need only filesystem listings. `commit_ts`
     * (wall clock) is what timestamp time travel resolves against
@@ -167,11 +174,8 @@ object TxnLog {
     * stamp ([[StoreLineage.history]]). */
   private[graft] def writeRecord(s: SparkSession, path: String, v: Int,
       batchId: Long, operation: String): Unit = {
-    import s.implicits._
-    Seq((batchId, System.currentTimeMillis(), operation))
-      .toDF("batch_id", "commit_ts", "operation")
-      .coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(VersionedStore.txnPath(path, v))
+    LocalParquet.write(s, VersionedStore.txnPath(path, v), LocalParquet.Table(
+      RecordSchema, Seq(Row(batchId, System.currentTimeMillis(), operation))))
     StoreIo.ops.createMarker(fsOf(s, path),
       new Path(VersionedStore.txnPath(path, v) + "/" + markerName(batchId)))
   }

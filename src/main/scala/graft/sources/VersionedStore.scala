@@ -1,8 +1,10 @@
 package graft.sources
 
 import graft.{Engine, Num, QueryPack, Tables}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType,
+  StringType, StructField, StructType}
 
 /** Snapshot-versioned store with time travel — the table-format
   * transaction-log idea (Delta/Iceberg snapshots) done storage-natively,
@@ -70,12 +72,27 @@ object VersionedStore extends QueryPack {
   private[graft] def hadoopLs(s: SparkSession, dir: String): Set[String] =
     LocalParquet.ls(s, dir).map(st => canon(st.getPath.toString)).toSet
 
+  /** Write version `v`'s manifest on the driver ([[LocalParquet.write]]):
+    * the one manifest writer, whether the table lists files only, files
+    * with key bands ([[bandManifest]]) or a parent's manifest verbatim. */
   private[graft] def writeManifest(s: SparkSession, path: String, v: Int,
-      files: Iterable[String]): Unit = {
-    import s.implicits._
-    files.toSeq.sorted.toDF("file")
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(manifestPath(path, v))
-  }
+      m: LocalParquet.Table): Unit =
+    LocalParquet.write(s, manifestPath(path, v), m)
+
+  /** A files-only manifest of `files`, sorted. */
+  private[graft] def writeManifest(s: SparkSession, path: String, v: Int,
+      files: Iterable[String]): Unit =
+    writeManifest(s, path, v, LocalParquet.Table(
+      StructType(Seq(StructField("file", StringType))),
+      files.toSeq.sorted.map(Row(_))))
+
+  /** A manifest of per-file key bands (file, mn, mx), sorted by file. */
+  private[graft] def bandManifest(
+      bands: Iterable[(String, Long, Long)]): LocalParquet.Table =
+    LocalParquet.Table(StructType(Seq(StructField("file", StringType),
+        StructField("mn", LongType, nullable = false),
+        StructField("mx", LongType, nullable = false))),
+      bands.toSeq.sortBy(_._1).map { case (f, mn, mx) => Row(f, mn, mx) })
 
   /** Version `v`'s manifest table, read on the driver: one listing
     * and one small file, no Spark job. */
@@ -1215,24 +1232,46 @@ object VersionedStore extends QueryPack {
       if (files.isEmpty) Array.empty
       else {
         val rebuilt = keyBands(s, files, keyCol)
-        import s.implicits._
-        rebuilt.sortBy(_._1).toSeq.toDF("file", "mn", "mx")
-          .coalesce(1).write.mode(SaveMode.Overwrite).parquet(manifestPath(path, v))
+        writeManifest(s, path, v, bandManifest(rebuilt))
         rebuilt
       }
     }
   }
 
-  /** Per file of `files`: (canonical file, mn, mx) of its keys in long
-    * space — one Spark aggregate, typed off the first file's footer, so
-    * no schema-inference job runs. */
+  /** Per file of `files` that holds rows: (canonical file, mn, mx) of
+    * its keys in long space. An integral key's long image is a cast, so
+    * the footer's column-chunk min/max over the file's row groups IS its
+    * band: one footer read per file on the driver, no job. A hashed
+    * (string/binary) key, and any file whose footer lacks statistics
+    * for the key, take one Spark aggregate instead, typed off the first
+    * file's footer so no schema-inference job runs. */
   private[graft] def keyBands(s: SparkSession, files: Seq[String],
       keyCol: String): Array[(String, Long, Long)] = {
-    val data = s.read.schema(fileSchema(s, files.head)).parquet(files: _*)
-    data.groupBy(input_file_name().as("file"))
-      .agg(min(keyLong(data, keyCol)).as("mn"), max(keyLong(data, keyCol)).as("mx"))
-      .collect()
-      .map(r => (canon(r.getString(0)), r.getLong(1), r.getLong(2)))
+    val schema = fileSchema(s, files.head)
+    // per file: its row groups' bounds when every group has statistics
+    val footer: Seq[(String, Option[Seq[(Long, Long)]])] =
+      schema(keyCol).dataType match {
+        case LongType | IntegerType | ShortType | ByteType =>
+          files.zip(LocalParquet.status(s, files)).map { case (f, st) =>
+            val groups = LocalParquet.integralBounds(s, st, keyCol)
+            f -> (if (groups.forall(_.isDefined)) Some(groups.flatten) else None)
+          }
+        case _ => files.map(_ -> None)
+      }
+    val fromFooter = footer.collect { case (f, Some(gs)) if gs.nonEmpty =>
+      (canon(f), gs.map(_._1).min, gs.map(_._2).max)
+    }
+    val rest = footer.collect { case (f, None) => f }
+    val aggregated =
+      if (rest.isEmpty) Nil
+      else {
+        val data = s.read.schema(schema).parquet(rest: _*)
+        data.groupBy(input_file_name().as("file"))
+          .agg(min(keyLong(data, keyCol)).as("mn"), max(keyLong(data, keyCol)).as("mx"))
+          .collect().toSeq
+          .map(r => (canon(r.getString(0)), r.getLong(1), r.getLong(2)))
+      }
+    (fromFooter ++ aggregated).toArray
   }
 
   /** Per-FILE key blooms as a shared SIDE relation (file, bloom) —
@@ -1650,7 +1689,6 @@ object VersionedStore extends QueryPack {
           val newFiles = hadoopLs(s, outDir)
           val ownSet = owning.toSet
           val sharedStats = stats.filterNot(t => ownSet(t._1))
-          import s.implicits._
           // rewritten files get fresh bands in the manifest and their
           // blooms appended ONCE to the shared side relation (they sit
           // in executor cache from the rewrite); shared files keep both
@@ -1659,10 +1697,8 @@ object VersionedStore extends QueryPack {
             else keyBands(s, newFiles.toSeq.sorted, keyCol)
           appendBlooms(s, path, newFiles.toSeq.sorted, keyCol)
           ColStats.onCommit(s, path, newFiles.toSeq.sorted)
-          (sharedStats.map(t => (t._1, t._2, t._3)) ++ newStats).sortBy(_._1)
-            .toSeq.toDF("file", "mn", "mx")
-            .coalesce(1).write.mode(SaveMode.Overwrite)
-            .parquet(manifestPath(path, v))
+          writeManifest(s, path, v,
+            bandManifest(sharedStats.map(t => (t._1, t._2, t._3)) ++ newStats))
           true
         }
       }
@@ -1772,9 +1808,7 @@ object VersionedStore extends QueryPack {
             .withColumn("_change_type", lit("delete")), keyCol)
         // manifest = parent's, verbatim (stats columns and all):
         // every data file shared by reference — zero amplification
-        s.read.parquet(manifestPath(path, cur))
-          .coalesce(1).write.mode(SaveMode.Overwrite)
-          .parquet(manifestPath(path, v))
+        writeManifest(s, path, v, manifest(s, path, cur))
         true
       }}
     }.tip.get
@@ -2187,14 +2221,8 @@ object VersionedStore extends QueryPack {
           .repartitionByRange(12, col("o_custkey"))
           .sortWithinPartitions("o_custkey")
           .write.mode(SaveMode.Overwrite).parquet(dp)
-        import s.implicits._
-        s.read.parquet(dp)
-          .groupBy(input_file_name().as("file"))
-          .agg(min(col("o_custkey")).as("mn"), max(col("o_custkey")).as("mx"))
-          .collect().map(x => (canon(x.getString(0)), x.getLong(1), x.getLong(2)))
-          .sortBy(_._1).toSeq.toDF("file", "mn", "mx")
-          .coalesce(1).write.mode(SaveMode.Overwrite)
-          .parquet(manifestPath(path, 1))
+        writeManifest(s, path, 1,
+          bandManifest(keyBands(s, hadoopLs(s, dp).toSeq.sorted, "o_custkey")))
         deleteCommitDv(s, path, purgeKeys(s, dir), "o_custkey")
       }
       path

@@ -20,9 +20,12 @@ import org.apache.spark.storage.StorageLevel
   * commits a new manifest + txn marker through [[TxnLog.commit]]
   * (exactly once: a checkpoint-replayed batch id is skipped).
   *
-  * Per-trigger cost therefore tracks the BATCH — bytes written =
-  * batch rows + the touched files' survivors; bytes read = the touched
-  * files — never the store. Superseded files stay referenced by older
+  * Per-trigger cost therefore tracks the TOUCHED FILES — bytes
+  * written = batch rows + the touched files' survivors; bytes read =
+  * the touched files. That is the batch only while its keys fall in few
+  * of the store's key bands: a rewrite inherits the touched-file count,
+  * so a store born as one file stays one file and every trigger
+  * rewrites all of it. Superseded files stay referenced by older
   * manifests (time travel through [[VersionedStore.readVersion]]) until
   * [[VersionedStore.vacuum]] reclaims them.
   *
@@ -37,14 +40,24 @@ import org.apache.spark.storage.StorageLevel
   * that count instead of counting the diff.
   *
   * Store metadata costs no Spark job: the txn tip and replay check are
-  * filesystem listings, and the parent manifest, the key-type check on
-  * one parent file's footer and the metadata checkpoint's txn records
-  * are read on the driver ([[graft.sources.LocalParquet]]). The Spark
-  * reads of store files are typed off that footer, so none runs a
-  * schema-inference job. What remains per trigger is the fold once,
-  * the key aggregate, the owning-file join, the rewrite of the touched
-  * files, the read-back of the new files' key bands, and the manifest,
-  * CDC and txn writes.
+  * filesystem listings; the parent manifest, the key-type check on one
+  * parent file's footer and the metadata checkpoint's txn records are
+  * read on the driver ([[graft.sources.LocalParquet]]); the new files'
+  * key bands come from their footers ([[VersionedStore.keyBands]], for
+  * integral keys); and the manifest and the txn record are written on
+  * the driver ([[graft.sources.LocalParquet.write]]). The Spark reads of
+  * store files are typed off a footer, so none runs a schema-inference
+  * job. What remains per trigger is four Spark executions:
+  *
+  *  1. the fold, once, with the key aggregate (emptiness, band, count,
+  *     null check) over the persisted keys;
+  *  2. the owning-file join of the batch keys against the parent bands;
+  *  3. the rewrite of the touched files;
+  *  4. the write-path CDC: the pre-images against the batch in one
+  *     full outer join ([[graft.sources.ChangeFeed.keyedDiff]]).
+  *
+  * A parent deletion vector adds the resurrection probe, and a hashed
+  * (string/binary) key adds the band aggregate over the new files.
   */
 /** The upsert manifest row: member file + its key band. The extra
   * stats columns ride alongside [[VersionedStore]]'s `file` column, so
@@ -101,14 +114,6 @@ object UpsertSink {
   private def requireSupportedKey(df: DataFrame, keyCol: String): Unit =
     VersionedStore.requireSupportedKey(df, keyCol)
 
-  private def writeManifest(s: SparkSession, path: String, v: Int,
-      rows: Seq[FileStats]): Unit = {
-    import s.implicits._
-    rows.sortBy(_.file).toDF()
-      .coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(VersionedStore.manifestPath(path, v))
-  }
-
   /** Files of the newest committed version whose key band can contain
     * a key of `keys` — the stats-manifest prune. Bounded driver state
     * (the manifest's file count); the decision join is broadcast. */
@@ -159,7 +164,11 @@ object UpsertSink {
     * are provably disjoint; otherwise it declines, the slot is
     * abandoned (vacuum reclaims the leftovers) and the whole rewrite
     * RETRIES against the new tip — correctness over wasted work,
-    * bounded attempts. */
+    * bounded attempts.
+    *
+    * A batch with a null key is refused (IllegalArgumentException)
+    * before any claim: a null key matches no stored row, so every
+    * upsert of it would add another row. */
   def upsertBatch(batch: DataFrame, path: String, batchId: Long,
       keyCol: String, initialPartitions: Int = 1,
       settleTimeoutMs: Long = 30000L): Option[Int] =
@@ -185,11 +194,15 @@ object UpsertSink {
         .distinct()
       persisted(keys) { allKeys =>
         // emptiness, the key band (the disjoint-conflict fast path's
-        // overlap probe) and the key count (the CDC sizing bound) in one
-        // aggregate over the persisted keys
+        // overlap probe), the key count (the CDC sizing bound) and the
+        // null-key check in one aggregate over the persisted keys
         val r = allKeys.agg(count(lit(1)),
           min(VersionedStore.keyLong(allKeys, keyCol)),
-          max(VersionedStore.keyLong(allKeys, keyCol))).head()
+          max(VersionedStore.keyLong(allKeys, keyCol)),
+          count(col(keyCol))).head()
+        if (r.getLong(0) > r.getLong(3))
+          throw new IllegalArgumentException(s"$operation batch for $path " +
+            s"carries a null '$keyCol': a keyed store needs a key on every row")
         if (r.getLong(0) == 0L) None
         else commit(b, allKeys, path, batchId, keyCol, initialPartitions,
           settleTimeoutMs, operation, BatchKeys(r.getLong(1), r.getLong(2),
@@ -295,17 +308,17 @@ object UpsertSink {
       parentSchema: Option[org.apache.spark.sql.types.StructType],
       keys: BatchKeys): Unit = {
     val s = batch.sparkSession
-    // Stats for the new files: a read-back of ONLY the files this
-    // commit wrote (O(batch)), grouped by physical file, typed off one
-    // new file's footer.
-    // a merge whose every touched row was deleted writes no files
+    // Key bands of ONLY the files this commit wrote: their footers for
+    // an integral key, an aggregate over them for a hashed one.
+    // A merge whose every touched row was deleted writes no files.
     val newFiles = VersionedStore.hadoopLs(s, dataDir).toSeq.sorted
     val newStats = if (newFiles.isEmpty) Array.empty[FileStats]
       else VersionedStore.keyBands(s, newFiles, keyCol).map(FileStats.tupled)
 
     val ownSet = owning.toSet
-    writeManifest(s, path, v,
-      parentStats.filterNot(fs => ownSet(fs.file)).toSeq ++ newStats)
+    VersionedStore.writeManifest(s, path, v, VersionedStore.bandManifest(
+      (parentStats.filterNot(fs => ownSet(fs.file)) ++ newStats)
+        .map(fs => (fs.file, fs.mn, fs.mx))))
     graft.sources.ColStats.onCommit(s, path, newFiles)
     // write-path CDC (round 15): classify the batch against the
     // pre-images it replaced — MINUS the parent's deletion vector
