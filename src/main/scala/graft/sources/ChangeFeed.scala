@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.{Num, QueryPack}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Read-path CHANGE DATA FEED over a [[VersionedStore]] commit lineage —
@@ -227,33 +227,66 @@ object ChangeFeed extends QueryPack {
   /** Row-grain keyed diff of one commit's pre/post images. Schemas are
     * aligned by name first (evolution adds columns as null on the old
     * side), then compared as one null-safe struct per side. One pass:
-    * a single full outer join, minus the keys whose two sides are
-    * null-safe equal, each surviving key exploded into its one or two
-    * tagged change rows (`insert`, `delete`, or an
-    * `update_preimage`/`update_postimage` pair). Shared with the keyed
-    * upsert sink's write-path CDC classifier. */
+    * a single full outer join, each key's one or two tagged change rows
+    * (`insert`, `delete`, or an `update_preimage`/`update_postimage`
+    * pair; none when the two sides are null-safe equal) exploded out.
+    * Its helpers are shared with the keyed upsert's commit
+    * ([[graft.streaming.UpsertSink]]), which tags its store rows in the
+    * same pass. */
   private[graft] def keyedDiff(pre: DataFrame, post: DataFrame,
       keyCol: String): DataFrame = {
-    val cols = (pre.columns ++ post.columns).distinct.filterNot(_ == keyCol)
-    def aligned(df: DataFrame, tag: String): DataFrame = {
-      val have = df.columns.toSet
-      val fields = cols.map(c =>
-        if (have(c)) col(c) else lit(null).as(c))
-      df.select(col(keyCol), struct(fields.toIndexedSeq: _*).as(tag))
-    }
-    def tagged(side: String, ct: String) =
-      struct(cols.map(c => col(side).getField(c).as(c)).toIndexedSeq :+
-        lit(ct).as(ChangeType): _*)
-    val change = "_change"
-    aligned(pre, "_pre").join(aligned(post, "_post"), Seq(keyCol), "full_outer")
-      .filter(!(col("_pre") <=> col("_post")))
-      .select(col(keyCol), explode(
-        when(col("_pre").isNull, array(tagged("_post", "insert")))
-          .when(col("_post").isNull, array(tagged("_pre", "delete")))
-          .otherwise(array(tagged("_pre", "update_preimage"),
-            tagged("_post", "update_postimage")))).as(change))
-      .select(col(keyCol) +: (cols :+ ChangeType).map(c =>
-        col(change).getField(c).as(c)).toIndexedSeq: _*)
+    val cols = payload(pre, post, keyCol)
+    exploded(
+      aligned(pre, keyCol, cols, "_pre")
+        .join(aligned(post, keyCol, cols, "_post"), Seq(keyCol), "full_outer"),
+      keyCol, changeRows(col("_pre"), col("_post"), cols), keyCol +: cols)
+  }
+
+  /** The payload columns (all but the key) of a pre/post pair, by name:
+    * pre's in order, then those only post has. */
+  private[graft] def payload(pre: DataFrame, post: DataFrame,
+      keyCol: String): Seq[String] =
+    (pre.columns ++ post.columns).distinct.filterNot(_ == keyCol).toSeq
+
+  /** `df` as its key plus one struct `tag` of `cols`, a column `df`
+    * lacks as null: one side of a diff, aligned by name. */
+  private[graft] def aligned(df: DataFrame, keyCol: String, cols: Seq[String],
+      tag: String): DataFrame = {
+    val have = df.columns.toSet
+    df.select(col(keyCol), struct(cols.map(c =>
+      if (have(c)) col(c) else lit(null).as(c)): _*).as(tag))
+  }
+
+  /** One change row: the `cols` of struct `side` plus its change type. */
+  private[graft] def tagged(side: Column, cols: Seq[String], ct: String): Column =
+    struct(cols.map(c => side.getField(c).as(c)) :+ lit(ct).as(ChangeType): _*)
+
+  /** A key's change rows, given its aligned pre and post structs (null:
+    * absent on that side), as two tagged rows, each null where there is
+    * none: nothing when the sides are null-safe equal, else an `insert`,
+    * a `delete`, or an update pair. */
+  private[graft] def changeRows(pre: Column, post: Column,
+      cols: Seq[String]): Seq[Column] = {
+    val changed = !(pre <=> post)
+    Seq(
+      when(changed, when(pre.isNull, tagged(post, cols, "insert"))
+        .when(post.isNull, tagged(pre, cols, "delete"))
+        .otherwise(tagged(pre, cols, "update_preimage"))),
+      when(changed && pre.isNotNull && post.isNotNull,
+        tagged(post, cols, "update_postimage")))
+  }
+
+  /** One output row per non-null tagged row of `rows` over `df`'s rows:
+    * the columns `out` (the key from `df`, the rest from the tagged
+    * row) then the change type. */
+  private[graft] def exploded(df: DataFrame, keyCol: String, rows: Seq[Column],
+      out: Seq[String]): DataFrame = {
+    val row = "_change"
+    df.select(col(keyCol), explode(array(rows: _*)).as(row))
+      .filter(col(row).isNotNull)
+      .select(out.map(c =>
+        if (c == keyCol) col(keyCol) else col(row).getField(c).as(c)) :+
+        col(row).getField(ChangeType).as(ChangeType): _*)
   }
 
   /** q120: the change feed of the full q107/q109 lineage — append (v2),

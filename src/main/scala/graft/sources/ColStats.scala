@@ -3,6 +3,7 @@ package graft.sources
 import graft.{Num, QueryPack}
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import scala.jdk.CollectionConverters._
 
 /** DATA SKIPPING on arbitrary columns — the Delta/Iceberg per-file
@@ -47,11 +48,20 @@ object ColStats extends QueryPack {
     val stats = s.read.parquet(files: _*)
       .groupBy(input_file_name().as("file"))
       .agg(min(col(colName)).as("mn"), max(col(colName)).as("mx"))
-    val rows = stats.collect()
-      .map(r => Row(VersionedStore.canon(r.getString(0)), r.get(1), r.get(2)))
-      .sortBy(_.getString(0))
-    s.createDataFrame(rows.toSeq.asJava, stats.schema)
-      .coalesce(1).write.mode(SaveMode.Append).parquet(dir(path, colName))
+    appendStats(s, path, colName, stats.schema, stats.collect(), "mn", "mx")
+  }
+
+  /** Append one stats file to `colName`'s relation on the driver
+    * ([[LocalParquet.append]]): per row of `rows` (typed by `schema`),
+    * its `file` and the fields `mn` and `mx`, sorted by file. */
+  private def appendStats(s: SparkSession, path: String, colName: String,
+      schema: StructType, rows: Array[Row], mn: String, mx: String): Unit = {
+    val (mnI, mxI) = (schema.fieldIndex(mn), schema.fieldIndex(mx))
+    val outSchema = StructType(Seq(StructField("file", StringType, nullable = false),
+      schema(mnI).copy(name = "mn"), schema(mxI).copy(name = "mx")))
+    LocalParquet.append(s, dir(path, colName), LocalParquet.Table(outSchema, rows
+      .map(r => Row(VersionedStore.canon(r.getString(0)), r.get(mnI), r.get(mxI)))
+      .sortBy(_.getString(0)).toSeq))
   }
 
   /** The column's stats relation, one entry per file — resolved
@@ -108,23 +118,23 @@ object ColStats extends QueryPack {
     * one existence probe and nothing else. */
   def configDir(path: String): String = path + "/colstats_config"
 
-  def configure(s: SparkSession, path: String, cols: Seq[String]): Unit = {
-    import s.implicits._
-    cols.distinct.sorted.toDF("column").coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(configDir(path))
-  }
+  def configure(s: SparkSession, path: String, cols: Seq[String]): Unit =
+    LocalParquet.write(s, configDir(path), LocalParquet.Table(
+      StructType(Seq(StructField("column", StringType))),
+      cols.distinct.sorted.map(Row(_))))
 
+  /** The configured columns, read on the driver ([[LocalParquet]]). */
   def configured(s: SparkSession, path: String): Seq[String] = {
     val p = new org.apache.hadoop.fs.Path(configDir(path))
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) Nil
-    else s.read.parquet(configDir(path))
-      .select(col("column")).collect().map(_.getString(0)).toSeq.sorted
+    else LocalParquet.table(s, configDir(path)).rows.map(_.getString(0)).sorted
   }
 
   /** Commit hook: stat `files` for every configured column in ONE
     * bounded scan (all min/max pairs ride the same aggregate), then
-    * append each column's (file, mn, mx) rows to its own relation.
+    * append each column's (file, mn, mx) rows to its own relation as
+    * one more file, written on the driver (no job per column).
     * Called by the [[VersionedStore]] committers and the streaming
     * sinks with exactly the files the commit created — stats stay
     * fresh without any read-path heal. (The vacuum dv fold's rewrite
@@ -133,7 +143,8 @@ object ColStats extends QueryPack {
   def onCommit(s: SparkSession, path: String, files: Seq[String]): Unit = {
     val want = configured(s, path)
     if (want.isEmpty || files.isEmpty) return
-    val df = s.read.parquet(files: _*)
+    // typed off one footer: the new files share one write's schema
+    val df = s.read.schema(VersionedStore.fileSchema(s, files.head)).parquet(files: _*)
     // schema evolution: a batch lacking a configured column just skips
     // it — its files fail open in that column's prune, never break it
     val cols = want.filter(df.columns.contains)
@@ -144,20 +155,7 @@ object ColStats extends QueryPack {
       .groupBy(input_file_name().as("file"))
       .agg(aggs.head, aggs.tail: _*)
     val rows = stats.collect()
-    val schema = stats.schema
-    cols.foreach { c =>
-      val mnI = schema.fieldIndex(s"mn_$c")
-      val mxI = schema.fieldIndex(s"mx_$c")
-      val outSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("file",
-          org.apache.spark.sql.types.StringType, nullable = false),
-        schema(mnI).copy(name = "mn"), schema(mxI).copy(name = "mx")))
-      val out = rows
-        .map(r => Row(VersionedStore.canon(r.getString(0)), r.get(mnI), r.get(mxI)))
-        .sortBy(_.getString(0))
-      s.createDataFrame(out.toSeq.asJava, outSchema)
-        .coalesce(1).write.mode(SaveMode.Append).parquet(dir(path, c))
-    }
+    cols.foreach(c => appendStats(s, path, c, stats.schema, rows, s"mn_$c", s"mx_$c"))
   }
 
   /** Side-relation GC (called from [[VersionedStore.vacuum]], the bloom

@@ -34,9 +34,9 @@ import org.apache.spark.sql.types.StructType
   * Nothing read here is cached: every call lists, opens and decodes
   * afresh, so a reader always sees the files as they are now.
   *
-  * [[write]] is the twin for driver-held metadata: the rows go through
-  * Spark's own parquet output writer, so the file is the one a
-  * `coalesce(1).write.parquet` would leave, without the job. */
+  * [[write]] (and [[append]]) is the twin for driver-held metadata: the
+  * rows go through Spark's own parquet output writer, so the file is the
+  * one a `coalesce(1).write.parquet` would leave, without the job. */
 object LocalParquet {
 
   /** A small parquet table read whole: its schema and rows. */
@@ -151,7 +151,16 @@ object LocalParquet {
     * as a hidden temp, published with [[StoreIo.ops]]' rename, and
     * `_SUCCESS` follows. Whatever `dir` held before goes only after the
     * publish: a failure earlier leaves the old table readable. */
-  def write(s: SparkSession, dir: String, t: Table): Unit = {
+  def write(s: SparkSession, dir: String, t: Table): Unit =
+    publish(s, dir, t, replace = true)
+
+  /** [[write]] keeping what `dir` already holds: `t`'s rows become one
+    * more file of the table there. */
+  def append(s: SparkSession, dir: String, t: Table): Unit =
+    publish(s, dir, t, replace = false)
+
+  private def publish(s: SparkSession, dir: String, t: Table,
+      replace: Boolean): Unit = {
     val conf = s.sessionState.newHadoopConf()
     val job = Job.getInstance(conf)
     val factory = new ParquetFileFormat().prepareWrite(s, job, Map.empty, t.schema)
@@ -159,7 +168,7 @@ object LocalParquet {
       new TaskID(new JobID("graft", 0), TaskType.MAP, 0), 0))
     val d = new Path(dir)
     val fs = d.getFileSystem(conf)
-    val stale = if (fs.exists(d)) fs.listStatus(d).toSeq else Nil
+    val stale = if (replace && fs.exists(d)) fs.listStatus(d).toSeq else Nil
     val name = s"part-00000-${java.util.UUID.randomUUID()}-c000" +
       factory.getFileExtension(ctx)
     val tmp = new Path(d, s".$name.tmp")

@@ -154,7 +154,7 @@ object VersionedStore extends QueryPack {
     }
 
   /** The dv commit [[dvAt]] resolves for version `v`. */
-  private def dvVersionAt(s: SparkSession, path: String, v: Int): Option[Int] = {
+  private[graft] def dvVersionAt(s: SparkSession, path: String, v: Int): Option[Int] = {
     val dvs = dvVersions(s, path)
     if (dvs.isEmpty) None
     else {
@@ -1404,6 +1404,14 @@ object VersionedStore extends QueryPack {
       .flatten.sorted
   }
 
+  /** Version `v`'s change rows, when it is committed and wrote them.
+    * Two layouts read alike here, with `_change_type` the last column:
+    * a keyed upsert or MERGE writes its change rows partitioned by
+    * `_change_type` (one subdirectory per change type, restored as a
+    * column by partition discovery; an empty flat relation when the
+    * commit changed no row — see [[graft.streaming.UpsertSink]]), and
+    * the delete commits write one flat relation carrying the column
+    * ([[writeCdc]]). */
   private[graft] def readCdc(s: SparkSession, path: String,
       v: Int): Option[DataFrame] = {
     val p = new org.apache.hadoop.fs.Path(cdcPath(path, v))
@@ -1421,27 +1429,22 @@ object VersionedStore extends QueryPack {
     * pre-image relation). */
   private val CdcBytesPerRow = 64L
 
-  /** Persist one commit's change rows SIZED from their count (the
+  /** Persist a delete commit's change rows (`_change_type` a data
+    * column, one flat relation) SIZED from their count (the
     * [[deleteCommitDv]] ceil rule — a small feed lands in one file, one
-    * nearing file scale splits instead of a single monolithic task).
-    * A committer that can bound the row count up front passes
-    * `rowBound` and the rows are evaluated once, by the write; without
-    * it they are persisted and counted first. */
+    * nearing file scale splits instead of a single monolithic task):
+    * the rows are persisted and counted first. The keyed upsert writes
+    * its change rows in its rewrite's own job instead, partitioned by
+    * change type. */
   private[graft] def writeCdc(s: SparkSession, path: String, v: Int,
-      rows: DataFrame, keyCol: String, targetFileBytes: Long = 64L << 20,
-      rowBound: Option[Long] = None): Unit = {
-    def write(df: DataFrame, n: Long): Unit = {
+      rows: DataFrame, keyCol: String, targetFileBytes: Long = 64L << 20): Unit = {
+    val r = rows.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
       val nf = math.max(1L,
-        (n * CdcBytesPerRow + targetFileBytes - 1) / targetFileBytes).toInt
-      df.repartitionByRange(nf, col(keyCol)).sortWithinPartitions(keyCol)
+        (r.count() * CdcBytesPerRow + targetFileBytes - 1) / targetFileBytes).toInt
+      r.repartitionByRange(nf, col(keyCol)).sortWithinPartitions(keyCol)
         .write.mode(SaveMode.Overwrite).parquet(cdcPath(path, v))
-    }
-    rowBound match {
-      case Some(n) => write(rows, n)
-      case None =>
-        val r = rows.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try write(r, r.count()) finally r.unpersist(false)
-    }
+    } finally r.unpersist(false)
   }
 
   /** READ-ONLY twin of [[fileKeyStatsBloomed]] for read-path planners

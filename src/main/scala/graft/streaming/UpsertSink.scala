@@ -1,7 +1,8 @@
 package graft.streaming
 
-import graft.sources.{TxnLog, VersionedStore}
+import graft.sources.{ChangeFeed, LocalParquet, StoreIo, TxnLog, VersionedStore}
 import graft.streaming.Streams.EntityUpdate
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQuery}
@@ -31,13 +32,11 @@ import org.apache.spark.storage.StorageLevel
   *
   * ONE EVALUATION PER BATCH: a `foreachBatch` frame re-runs its whole
   * upstream — the entity fold and its state commit included — for every
-  * action taken on it, and a commit takes about six (emptiness and key
-  * band, owning files, rewrite, CDC diff and its sizing). So
-  * [[upsertBatch]] persists the batch and its distinct keys at entry and
-  * releases both on every exit (commit, replay skip, empty batch, lost
-  * race, exception); emptiness, key band and key count come from one
-  * aggregate over the persisted keys, and the CDC write is sized from
-  * that count instead of counting the diff.
+  * action taken on it. So [[upsertBatch]] persists the batch and its
+  * distinct keys at entry and releases both on every exit (commit,
+  * replay skip, empty batch, lost race, exception); emptiness, the key
+  * band and the null-key check come from one aggregate over the
+  * persisted keys.
   *
   * Store metadata costs no Spark job: the txn tip and replay check are
   * filesystem listings; the parent manifest, the key-type check on one
@@ -47,14 +46,27 @@ import org.apache.spark.storage.StorageLevel
   * integral keys); and the manifest and the txn record are written on
   * the driver ([[graft.sources.LocalParquet.write]]). The Spark reads of
   * store files are typed off a footer, so none runs a schema-inference
-  * job. What remains per trigger is four Spark executions:
+  * job. What remains per trigger is two Spark executions:
   *
-  *  1. the fold, once, with the key aggregate (emptiness, band, count,
-  *     null check) over the persisted keys;
-  *  2. the owning-file join of the batch keys against the parent bands;
-  *  3. the rewrite of the touched files;
-  *  4. the write-path CDC: the pre-images against the batch in one
-  *     full outer join ([[graft.sources.ChangeFeed.keyedDiff]]).
+  *  1. the fold, once, with the key aggregate (emptiness, band, null
+  *     check) over the persisted keys. The band decides the owning
+  *     files: a file whose band holds the batch's lowest or highest key
+  *     owns a batch key, one disjoint from that range owns none, and
+  *     only files strictly inside it meet the batch keys in a broadcast
+  *     join (an extra execution; none on a one-file store);
+  *  2. one job that writes the rewrite AND the write-path change rows
+  *     ([[commitRows]]): a full outer join of the owning files' rows
+  *     with the batch yields per key its store row and its change rows
+  *     (the [[graft.sources.ChangeFeed.keyedDiff]] classification), all
+  *     tagged with `_change_type` and written range-partitioned by key,
+  *     partitioned by `_change_type`, under `cdc/v<N>` — Delta's
+  *     change-data-feed write. The store rows' partition
+  *     (`_change_type=__store__`) is then renamed to `data/v<N>`
+  *     through [[graft.sources.StoreIo]], leaving one subdirectory per
+  *     change type (`insert`, `delete`, `update_preimage`,
+  *     `update_postimage`) that partition discovery reads back as the
+  *     `_change_type` column; a commit that changes no row leaves an
+  *     empty typed relation instead.
   *
   * A parent deletion vector adds the resurrection probe, and a hashed
   * (string/binary) key adds the band aggregate over the new files.
@@ -64,7 +76,7 @@ import org.apache.spark.storage.StorageLevel
   * every batch reader (versionFiles/readVersion/vacuum) works unchanged
   * while the writer prunes rewrites by key range. Top-level (not nested
   * in the object) so its Encoder stays codegen-compatible. */
-private[streaming] case class FileStats(file: String, mn: Long, mx: Long)
+private[graft] case class FileStats(file: String, mn: Long, mx: Long)
 
 object UpsertSink {
 
@@ -128,6 +140,18 @@ object UpsertSink {
       .select(col("file")).distinct().as[String].collect()
   }
 
+  /** The owning-file decision the bands settle alone, for a batch whose
+    * keys span [lo, hi] in long space: a band holding `lo` or `hi` owns
+    * a batch key for certain (first), a band disjoint from [lo, hi]
+    * owns none, and a band strictly inside the range is undecided
+    * (second) — only those go to [[owningFiles]]' join. */
+  private[graft] def bandSplit(parent: Array[FileStats], lo: Long,
+      hi: Long): (Array[String], Array[FileStats]) = {
+    val (certain, open) = parent.filterNot(f => f.mx < lo || f.mn > hi)
+      .partition(f => f.mn <= lo || f.mx >= hi)
+    (certain.map(_.file), open)
+  }
+
   /** Read ONLY the current rows that could share a key with `keys` —
     * the read-side twin of the COW prune, for per-batch classification
     * (change capture) and point lookups: cost tracks the TOUCHED
@@ -179,9 +203,9 @@ object UpsertSink {
     * ([[graft.sources.StoreMerge]]): `dropKeys` keys REMOVE their store
     * rows without replacement (the WHEN MATCHED DELETE action riding
     * the same single rewrite the upsert pays), and `operation` stamps
-    * the txn record's intent. Owning files, the survivors' anti-join
-    * and the CDC pre-image set all plan over batch ∪ drop keys, so the
-    * change feed classifies merge deletes as `delete` rows for free. */
+    * the txn record's intent. Owning files, the store rows and the CDC
+    * pre-image set all plan over batch ∪ drop keys, so the change feed
+    * classifies merge deletes as `delete` rows for free. */
   private[graft] def upsertBatch(batch: DataFrame, path: String,
       batchId: Long, keyCol: String, initialPartitions: Int,
       settleTimeoutMs: Long, dropKeys: Option[DataFrame],
@@ -193,9 +217,9 @@ object UpsertSink {
         .getOrElse(b.select(col(keyCol)))
         .distinct()
       persisted(keys) { allKeys =>
-        // emptiness, the key band (the disjoint-conflict fast path's
-        // overlap probe), the key count (the CDC sizing bound) and the
-        // null-key check in one aggregate over the persisted keys
+        // emptiness, the key band (the owning-file split and the
+        // disjoint-conflict fast path's overlap probe) and the null-key
+        // check in one aggregate over the persisted keys
         val r = allKeys.agg(count(lit(1)),
           min(VersionedStore.keyLong(allKeys, keyCol)),
           max(VersionedStore.keyLong(allKeys, keyCol)),
@@ -205,14 +229,14 @@ object UpsertSink {
             s"carries a null '$keyCol': a keyed store needs a key on every row")
         if (r.getLong(0) == 0L) None
         else commit(b, allKeys, path, batchId, keyCol, initialPartitions,
-          settleTimeoutMs, operation, BatchKeys(r.getLong(1), r.getLong(2),
-            r.getLong(0)))
+          settleTimeoutMs, dropKeys.isDefined, operation,
+          BatchKeys(r.getLong(1), r.getLong(2)))
       }
     }
   }
 
-  /** The batch's distinct keys in long space: band and count. */
-  private case class BatchKeys(lo: Long, hi: Long, count: Long)
+  /** The band of the batch's distinct keys in long space. */
+  private case class BatchKeys(lo: Long, hi: Long)
 
   /** Run `f` over `ds` persisted, unpersisting it on every exit (return
     * or exception) — the one-evaluation rule above, for any sink that
@@ -226,62 +250,67 @@ object UpsertSink {
 
   /** The COW upsert plan of [[upsertBatch]] through the
     * [[TxnLog.commit]] loop, over the persisted non-empty batch and its
-    * persisted distinct keys (`allKeys`: batch ∪ drop keys). */
+    * persisted distinct keys (`allKeys`: batch ∪ drop keys, of which
+    * there are some when `drops`). */
   private def commit(batch: DataFrame, allKeys: DataFrame, path: String,
       batchId: Long, keyCol: String, initialPartitions: Int,
-      settleTimeoutMs: Long, operation: String, keys: BatchKeys): Option[Int] = {
+      settleTimeoutMs: Long, drops: Boolean, operation: String,
+      keys: BatchKeys): Option[Int] = {
     val s = batch.sparkSession
     TxnLog.commit(s, path, operation, Some(batchId), startsLineage = true,
         settleTimeoutMs) { latest =>
       // Parent manifest with per-file key stats: driver-side and bounded
       // by the store's file count (the manifest-store contract). Touched
-      // files = those whose [mn, mx] band contains a batch key — a
-      // broadcast join of the batch's keys against the k-row stats table,
-      // collecting only distinct FILE NAMES (file-count bounded).
+      // files = those whose [mn, mx] band contains a batch key: the bands
+      // decide every file but those strictly inside the batch's key
+      // range, and only those meet the batch keys in a broadcast join.
       val parent: Array[FileStats] = latest
         .map(pv => statsManifest(s, path, pv, keyCol)).getOrElse(Array.empty)
       // the parent's row schema, off one footer: the Spark reads of its
       // files below need no schema-inference job
       val parentSchema = parent.headOption.map(f =>
         VersionedStore.requireKeyClassMatch(s, f.file, batch, keyCol))
-      val owning: Array[String] = owningFiles(allKeys, parent, keyCol)
+      val (certain, open) = bandSplit(parent, keys.lo, keys.hi)
+      val owning: Array[String] = certain ++ owningFiles(allKeys, open, keyCol)
+      // the deletion vector in force at the parent: its keys' old rows
+      // are not pre-images (a dv-erased key's re-upsert is an insert)
+      val parentDvAt = latest.flatMap(VersionedStore.dvVersionAt(s, path, _))
+      val parentDv = latest.flatMap(VersionedStore.dvAt(s, path, _))
       Some { v =>
-        // Rewrite = touched files' survivors + the batch (keyed replace:
-        // the stream emits full merged entities, newest state wins; drop
-        // keys contribute to the anti-join but no replacement rows).
-        val rewritten =
-          if (owning.isEmpty) batch
-          else s.read.schema(parentSchema.get).parquet(owning.toIndexedSeq: _*)
-            .join(allKeys, Seq(keyCol), "left_anti")
-            .unionByName(batch)
-        val parts = math.max(1, if (owning.isEmpty) initialPartitions else owning.length)
         // per-VERSION data dir: slots are never reused once committed,
-        // so the Overwrite can only clobber an UNCOMMITTED crash
-        // leftover. A per-batch-id dir is unsafe under carry-forward: a
-        // checkpoint reset restarts ids at 0 and batch_0's rewrite would
-        // delete files the live manifest still references (round-12
-        // review finding).
+        // so the staging can only clobber an UNCOMMITTED crash leftover.
+        // A per-batch-id dir is unsafe under carry-forward: a checkpoint
+        // reset restarts ids at 0 and batch_0's rewrite would delete
+        // files the live manifest still references (round-12 review
+        // finding).
         val dataDir = VersionedStore.dataPath(path) + s"/v$v"
-        rewritten.repartitionByRange(parts, col(keyCol))
-          .sortWithinPartitions(keyCol)
-          .write.mode(SaveMode.Overwrite).parquet(dataDir)
+        val old = parentSchema.fold(LocalParquet.empty(s, batch.schema)) { sch =>
+          if (owning.isEmpty) LocalParquet.empty(s, sch)
+          else s.read.schema(sch).parquet(owning.toIndexedSeq: _*)
+        }
+        writeCommit(s, commitRows(old, batch, keyCol, Option.when(drops)(allKeys), parentDv),
+          path, v, dataDir, keyCol,
+          math.max(1, if (owning.isEmpty) initialPartitions else owning.length))
         settled => {
-          // the COW validity check: the rewrite above is only a correct
+          // the COW validity check: the staged version is only a correct
           // next version if the tip is STILL the parent it was computed
           // against — or if the interleaved commits are provably
           // DISJOINT (the Delta conflict-detection rule, round-16
           // verdict #6): (a) every owning file it supersedes survived
-          // the interleaved commits untouched, and (b) no interleaved
+          // the interleaved commits untouched, (b) no interleaved
           // commit added a file whose key band can overlap this batch's
           // keys (bands over-approximate, so a false overlap costs a
-          // replan, never a wrong tip). The commit then carries the
-          // SETTLED manifest minus the owning files — nothing
-          // re-planned. Without this, N equal-speed writers admit
-          // exactly one winner per round and a chronic loser burns all
-          // attempts.
+          // replan, never a wrong tip), and (c) the settled tip carries
+          // the deletion vector the change rows were classified against
+          // (a vector committed in between would turn an insert into an
+          // update pair). The commit then carries the SETTLED manifest
+          // minus the owning files — nothing re-planned. Without this,
+          // N equal-speed writers admit exactly one winner per round
+          // and a chronic loser burns all attempts.
           val commitParent: Option[Array[FileStats]] =
             if (settled == latest) Some(parent)
-            else settled.flatMap { sv =>
+            else settled.filter(sv =>
+              VersionedStore.dvVersionAt(s, path, sv) == parentDvAt).flatMap { sv =>
               val sParent = statsManifest(s, path, sv, keyCol)
               val sSet = sParent.map(_.file).toSet
               val latestSet = parent.map(_.file).toSet
@@ -291,8 +320,7 @@ object UpsertSink {
               if (ownSurvived && !addedOverlap) Some(sParent) else None
             }
           commitParent.foreach { parentStats =>
-            publish(batch, allKeys, path, v, settled, dataDir, keyCol,
-              parentStats, owning, parentSchema, keys)
+            publish(batch, path, v, dataDir, keyCol, parentStats, owning, parentDv)
           }
           commitParent.isDefined
         }
@@ -300,13 +328,76 @@ object UpsertSink {
     }.committed
   }
 
+  /** The `_change_type` of the store rows in [[commitRows]]: no change
+    * type the feed emits. */
+  private[graft] val StoreRows = "__store__"
+
+  /** One keyed commit's output in one frame: per key of the full outer
+    * join of `old` (the owning files' rows, or an empty typed frame)
+    * with `batch`,
+    *
+    *  - its store row, tagged [[StoreRows]]: the batch row; failing
+    *    that, nothing for a key of `drops` (MERGE's distinct batch ∪
+    *    drop keys); failing that, the old row;
+    *  - its change rows, as [[ChangeFeed.keyedDiff]] classifies them
+    *    for the keys the commit touches (batch ∪ drop keys), where an
+    *    old row whose key is in the parent's deletion vector `dv` is no
+    *    pre-image.
+    *
+    * Columns: the store's (old's order, then columns only the batch
+    * has) and `_change_type`. */
+  private[graft] def commitRows(old: DataFrame, batch: DataFrame,
+      keyCol: String, drops: Option[DataFrame],
+      dv: Option[DataFrame]): DataFrame = {
+    val cols = ChangeFeed.payload(old, batch, keyCol)
+    val (o, p, dropped, erased) = ("_old", "_post", "_dropped", "_erased")
+    // a key set marks the old rows it holds: `keys` are distinct
+    def marked(side: DataFrame, keys: Option[DataFrame], flag: String) =
+      keys.fold(side)(k => side.join(k.select(col(keyCol), lit(true).as(flag)),
+        Seq(keyCol), "left_outer"))
+    val rows = marked(marked(ChangeFeed.aligned(old, keyCol, cols, o),
+        dv.map(d => broadcast(d.select(col(keyCol)).distinct())), erased),
+        drops, dropped)
+      .join(ChangeFeed.aligned(batch, keyCol, cols, p), Seq(keyCol), "full_outer")
+    val touched = drops.fold(col(p).isNotNull)(_ => col(dropped).isNotNull)
+    val pre = dv.fold(when(touched, col(o)))(_ =>
+      when(touched && col(erased).isNull, col(o)))
+    val store = when(col(p).isNotNull, col(p)).when(!touched, col(o))
+    ChangeFeed.exploded(rows, keyCol,
+      when(store.isNotNull, ChangeFeed.tagged(store, cols, StoreRows)) +:
+        ChangeFeed.changeRows(pre, col(p), cols),
+      (old.columns ++ batch.columns).distinct.toSeq)
+  }
+
+  /** Write [[commitRows]] in one job: range-partitioned by key into
+    * `parts` tasks, partitioned by `_change_type` under `cdc/v<v>`; the
+    * store partition is then renamed to `dataDir`. A commit with no
+    * change rows leaves the empty change relation, typed. */
+  private def writeCommit(s: SparkSession, rows: DataFrame, path: String,
+      v: Int, dataDir: String, keyCol: String, parts: Int): Unit = {
+    val ct = ChangeFeed.ChangeType
+    val cdcDir = new Path(VersionedStore.cdcPath(path, v))
+    rows.repartitionByRange(parts, col(keyCol))
+      .sortWithinPartitions(ct, keyCol)
+      .write.mode(SaveMode.Overwrite).partitionBy(ct).parquet(cdcDir.toString)
+    val fs = cdcDir.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val storePart = new Path(cdcDir, s"$ct=$StoreRows")
+    val data = new Path(dataDir)
+    fs.delete(data, true)
+    if (fs.exists(storePart)) {
+      fs.mkdirs(data.getParent)
+      if (!StoreIo.ops.rename(fs, storePart, data))
+        throw new java.io.IOException(s"could not publish $storePart as $data")
+    }
+    if (!fs.listStatus(cdcDir).exists(_.getPath.getName.startsWith(s"$ct=")))
+      LocalParquet.write(s, cdcDir.toString, LocalParquet.Table(rows.schema, Nil))
+  }
+
   /** Publish a COW upsert at slot `v` over `parentStats`: the new
-    * manifest, column stats, write-path CDC and the dv resurrection. */
-  private def publish(batch: DataFrame, allKeys: DataFrame, path: String,
-      v: Int, settled: Option[Int], dataDir: String, keyCol: String,
-      parentStats: Array[FileStats], owning: Array[String],
-      parentSchema: Option[org.apache.spark.sql.types.StructType],
-      keys: BatchKeys): Unit = {
+    * manifest, column stats and the dv resurrection. */
+  private def publish(batch: DataFrame, path: String, v: Int,
+      dataDir: String, keyCol: String, parentStats: Array[FileStats],
+      owning: Array[String], parentDv: Option[DataFrame]): Unit = {
     val s = batch.sparkSession
     // Key bands of ONLY the files this commit wrote: their footers for
     // an integral key, an aggregate over them for a hashed one.
@@ -320,30 +411,6 @@ object UpsertSink {
       (parentStats.filterNot(fs => ownSet(fs.file)) ++ newStats)
         .map(fs => (fs.file, fs.mn, fs.mx))))
     graft.sources.ColStats.onCommit(s, path, newFiles)
-    // write-path CDC (round 15): classify the batch against the
-    // pre-images it replaced — MINUS the parent's deletion vector
-    // (a dv-erased key's physical leftover is not a pre-image; its
-    // re-upsert classifies as the INSERT it logically is, matching
-    // the metadata-diff fallback bit for bit) — O(batch) rows
-    // persisted at commit, so the change feed never re-diffs the
-    // file-sized rewrite; identical-payload replays classify to NO
-    // rows (the s15 rule)
-    val parentDv = VersionedStore.dvAt(s, path, settled.getOrElse(0))
-    val cdcRows =
-      if (owning.isEmpty)
-        batch.withColumn("_change_type", lit("insert"))
-      else {
-        val preRaw = s.read.schema(parentSchema.get).parquet(owning.toIndexedSeq: _*)
-          .join(allKeys, Seq(keyCol), "left_semi")
-        val pre = parentDv.fold(preRaw)(dv =>
-          preRaw.join(broadcast(dv), dv.columns.toSeq, "left_anti"))
-        graft.sources.ChangeFeed.keyedDiff(pre, batch.toDF(), keyCol)
-      }
-    // at most 2 change rows (an update's pre- and post-image) per
-    // distinct key: a file-count bound, so the diff runs only once,
-    // in the write itself
-    VersionedStore.writeCdc(s, path, v, cdcRows, keyCol,
-      rowBound = Some(2 * keys.count))
     // key-based dv RESURRECTION: a keyed write of key K supersedes
     // K's pending deletion — shrink the cumulative vector at this
     // slot, or the re-onboarded subject's new row stays invisible

@@ -205,4 +205,49 @@ class ColStatsSpec extends AnyFunSuite {
     assert(pruned.inputFiles.length == 2)
     assert(pruned.filter(col("amount") <= 10L).count() == 10L)
   }
+
+  test("a configured commit's stats cost one Spark aggregate: the config " +
+      "is read and the stats files are written on the driver") {
+    val path = Files.createTempDirectory("graft_colstats_jobs_").toString + "/store"
+    ColStats.configure(spark, path, Seq("amount", "key"))
+    assert(ColStats.configured(spark, path) == Seq("amount", "key"))
+    VersionedStore.appendCommit(spark, path,
+      (1L to 100L).map(k => (k, k * 3)).toDF("key", "amount"), "key", 2)
+    val files = VersionedStore.versionFiles(spark, path, 1).toSeq.sorted
+    val sc = spark.sparkContext
+    val executions = new java.util.concurrent.ConcurrentLinkedQueue[Option[String]]
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == "colstats-commit")
+          executions.add(Option(e.properties.getProperty("spark.sql.execution.id")))
+    }
+    sc.addSparkListener(l)
+    sc.setJobGroup("colstats-commit", "colstats-commit")
+    try {
+      ColStats.onCommit(spark, path, files)
+      org.apache.spark.ListenerBusBridge.drain(sc)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(l)
+    }
+    import scala.jdk.CollectionConverters._
+    val ids = executions.asScala.toSeq
+    info(s"configured onCommit: ${ids.size} jobs in ${ids.flatten.distinct.size} SQL executions")
+    assert(ids.nonEmpty && ids.forall(_.isDefined) && ids.flatten.distinct.size == 1,
+      s"jobs by execution: $ids")
+    // each column's relation holds the commit's (file, mn, mx), typed as
+    // the column, alongside the append commit's own entries
+    Seq("key" -> 1L, "amount" -> 3L).foreach { case (c, m) =>
+      val st = ColStats.read(spark, path, c).get
+      assert(st.schema("mn").dataType == org.apache.spark.sql.types.LongType)
+      val want = spark.read.parquet(files: _*).groupBy(input_file_name().as("file"))
+        .agg(min(col(c)), max(col(c))).as[(String, Long, Long)].collect()
+        .map(t => (VersionedStore.canon(t._1), t._2, t._3)).toSeq.sorted
+      assert(st.as[(String, Long, Long)].collect().toSeq.sorted == want, c)
+      assert(want.map(_._2).min == m)
+      assert(new java.io.File(ColStats.dir(path, c)).list().count(_.endsWith(".parquet")) == 2,
+        s"$c: one stats file per commit")
+    }
+  }
 }

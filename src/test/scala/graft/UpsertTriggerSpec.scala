@@ -18,7 +18,9 @@ import java.util.concurrent.atomic.AtomicInteger
   * key bands, txn record) is written and read on the driver with no
   * Spark job and lands as the files Spark's writer would leave; the
   * write-path change diff is one pass with the rows of the four-branch
-  * union it replaced; and a null batch key is refused before any claim. */
+  * union it replaced; a steady trigger runs two SQL executions, the
+  * bands deciding its owning files; and a null batch key is refused
+  * before any claim. */
 class UpsertTriggerSpec extends AnyFunSuite {
   import TestSpark.spark
   import spark.implicits._
@@ -34,6 +36,12 @@ class UpsertTriggerSpec extends AnyFunSuite {
     * submits runs on another thread, so only the execution's call site
     * names the code that asked for it.) */
   private def jobsOf[T](body: => T): (T, Seq[String]) = {
+    val (r, jobs) = executionsOf(body)
+    (r, jobs.map(_._2))
+  }
+
+  /** [[jobsOf]] with each job's SQL execution id. */
+  private def executionsOf[T](body: => T): (T, Seq[(Option[Long], String)]) = {
     val sc = spark.sparkContext
     val group = s"trigger-${groups.incrementAndGet()}"
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Option[Long], String)]
@@ -56,7 +64,7 @@ class UpsertTriggerSpec extends AnyFunSuite {
       ListenerBusBridge.drain(sc)
       import scala.jdk.CollectionConverters._
       (r, jobs.asScala.toSeq.map { case (x, stages) =>
-        x.flatMap(id => Option(executions.get(id))).getOrElse(stages) })
+        (x, x.flatMap(id => Option(executions.get(id))).getOrElse(stages)) })
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(l)
@@ -252,5 +260,55 @@ class UpsertTriggerSpec extends AnyFunSuite {
     val strFiles = filesOf(strs)
     assert(VersionedStore.keyBands(spark, strFiles, "key").toSeq.sorted ==
       aggregate(strFiles, xxhash64(col("key"))))
+  }
+
+  test("a steady upsert trigger on a one-file store runs two SQL " +
+      "executions and no owning-file join") {
+    val path = tmp("twoexec")
+    (0 until 3).foreach(b => UpsertSink.upsertBatch(
+      (0L until 300L).map(k => (k * 5 + b, k + b)).toDF("key", "amount"), path, b.toLong, "key"))
+    assert(VersionedStore.versionFiles(spark, path, 3).length == 1)
+    val batch = (0L until 50L).map(k => (k * 29, -k))
+    val (v, jobs) = executionsOf(UpsertSink.upsertBatch(
+      batch.toDF("key", "amount"), path, 3L, "key"))
+    assert(v.contains(4))
+    val executions = jobs.flatMap(_._1).distinct
+    info(s"steady upsertBatch: ${jobs.size} jobs in ${executions.size} SQL executions")
+    assert(jobs.forall(_._1.isDefined), "a job ran outside any SQL execution")
+    assert(executions.size == 2, jobs.map(_._2).distinct.mkString("\n---\n"))
+    assert(!jobs.exists(_._2.contains("owningFiles")), "the owning-file join ran")
+    assert(VersionedStore.versionFiles(spark, path, 4).length == 1)
+  }
+
+  test("the owning-file join runs only over the bands strictly inside the " +
+      "batch's key range, and the owning set equals the full join's") {
+    val path = tmp("threefile")
+    UpsertSink.upsertBatch((0L until 300L).map(k => (k, k)).toDF("key", "amount"),
+      path, 0L, "key", initialPartitions = 3)
+    def bands(v: Int) = VersionedStore.manifestBands(VersionedStore.manifest(spark, path, v))
+      .get.toSeq.sortBy(_._2)
+    // each batch's lowest key falls in the first band and its highest in
+    // the last; only the first batch has a key in the middle band
+    Seq((1L, Seq(10L, 150L, 250L)), (2L, Seq(20L, 260L))).foreach { case (id, keys) =>
+      val parent = VersionedStore.versions(spark, path).last
+      val bs = bands(parent)
+      assert(bs.size == 3 && keys.head <= bs(0)._3 && bs(1)._2 > keys.head &&
+        bs(1)._3 < keys.last && keys.last >= bs(2)._2, s"bands $bs")
+      val (certain, open) = UpsertSink.bandSplit(
+        bs.map { case (f, mn, mx) => graft.streaming.FileStats(f, mn, mx) }.toArray,
+        keys.head, keys.last)
+      assert(certain.toSet == Set(bs(0)._1, bs(2)._1) && open.map(_.file).toSeq == Seq(bs(1)._1))
+      val (_, jobs) = executionsOf(UpsertSink.upsertBatch(
+        keys.map(k => (k, -k)).toDF("key", "amount"), path, id, "key"))
+      assert(jobs.exists(_._2.contains("owningFiles")), "no owning-file join ran")
+      val owning = bs.map(_._1).toSet -- VersionedStore.versionFiles(spark, path, parent + 1)
+      val joined = bs.filter { case (_, mn, mx) => keys.exists(k => k >= mn && k <= mx) }
+        .map(_._1).toSet
+      assert(owning == joined)
+      assert(owning.size == (if (id == 1L) 3 else 2), s"owning $owning")
+      assert(owning.contains(bs(1)._1) == keys.exists(k => k >= bs(1)._2 && k <= bs(1)._3))
+    }
+    assert(multiset(UpsertSink.readStore(spark, path).filter(col("amount") < 0)) ==
+      Seq("[10,-10]", "[150,-150]", "[20,-20]", "[250,-250]", "[260,-260]"))
   }
 }
