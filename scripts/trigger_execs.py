@@ -3,7 +3,8 @@
 
 For every micro-batch (trigger) it prints each SQL execution the trigger
 ran: its wall time, jobs, stages and tasks, what it ran (the root of its
-physical plan, and a file write's output path) and its call site, and
+physical plan, and a file write's output path) and its call site (the
+step name, such as `upsert:fold`, for the steps a graft commit names), and
 the driver gaps between consecutive executions (time no execution was
 running). A summary of medians over the triggers follows, per plan.
 
@@ -64,10 +65,17 @@ def lines(files):
         yield from data.splitlines()
 
 
+STEP = re.compile(r"^\w+:\w+$")
+
+
 def call_site(start):
-    """The innermost graft frame of the call stack Spark recorded for the
-    execution, else its short description. (A stream's executions all
-    carry the stream's start call site.)"""
+    """The step name a graft commit sets on its jobs (`upsert:fold`,
+    `upsert:write`), else the innermost graft frame of the call stack
+    Spark recorded for the execution, else its short description. (A
+    stream's other executions all carry the stream's start call site.)"""
+    desc = (start.get("description") or "").strip()
+    if STEP.match(desc):
+        return desc
     for frame in (start.get("details") or "").splitlines():
         frame = frame.strip()
         if frame.startswith("graft.") and not frame.startswith("graftbench."):
@@ -190,8 +198,9 @@ def main():
                       f"stages {x['stages']:>2}  tasks {x['tasks']:>3}  {x['label']}  [{x['site']}]")
         seen = {}
         for x, w in zip(xs, walls):
-            seen[x["label"]] = seen.get(x["label"], 0) + 1
-            key = x["label"] + (f" #{seen[x['label']]}" if seen[x["label"]] > 1 else "")
+            name = f"{x['label']}  [{x['site']}]"
+            seen[name] = seen.get(name, 0) + 1
+            key = name + (f" #{seen[name]}" if seen[name] > 1 else "")
             by_site.setdefault(key, []).append(w)
     n = len(batches)
     print(f"\nsummary over {n} triggers (batch {batches[0]}..{batches[-1]}): medians")

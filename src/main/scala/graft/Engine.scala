@@ -180,6 +180,12 @@ object Engine {
     if (k < cur) df.coalesce(k.toInt) else df
   }
 
+  /** The graft session. Its `file:` scheme, for both Hadoop APIs, is
+    * [[graft.sources.LocalFs]]: Hadoop's local filesystem with the same
+    * calls and results, but no `chmod`/`readlink` process per file
+    * created or renamed. Hadoop caches the first `file:` `FileSystem` of
+    * the JVM, so build the session before any other Hadoop call, or
+    * that call's stock filesystem is the one every later caller gets. */
   def session(master: String = "local[*]", shufflePartitions: Int = 32,
       rocksDbStateStore: Boolean =
         sys.env.get("SPARK_GRAFT_ROCKSDB").contains("1")): SparkSession = {
@@ -197,6 +203,7 @@ object Engine {
       // (DuckDB truncates the same column to micros, so derived values agree)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config(graft.sources.LocalFs.sessionConf.toMap)
     val b =
       if (rocksDbStateStore)
         b0.config("spark.sql.streaming.stateStore.providerClass",

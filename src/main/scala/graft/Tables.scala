@@ -1,20 +1,49 @@
 package graft
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Named-table loader over the driver's parquet test layout.
   *
-  * Reads are plain `spark.read.parquet` so Catalyst predicate pushdown
-  * and column pruning reach the scan; callers select/filter lazily and
-  * never cache (each query owns its scan).
+  * Reads are `spark.read.parquet` so Catalyst predicate pushdown and
+  * column pruning reach the scan; callers select/filter lazily and
+  * never cache (each query owns its scan). The schema comes from one
+  * footer read on the driver ([[footerSchema]]), so building a frame
+  * starts no schema-inference job.
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    footerSchema(spark, path)
+      .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+  }
+
+  /** The schema Spark's inference reads for the parquet table at `path`
+    * without schema merging: the footer of a `_common_metadata`, else a
+    * `_metadata`, else the first data file by path (a file `path` is its
+    * own first file). None, leaving inference to Spark, when merging is
+    * on, the path is absent or empty, or it holds directories (partition
+    * discovery adds columns). */
+  private[graft] def footerSchema(s: SparkSession, path: String): Option[StructType] = {
+    if (s.sessionState.conf.isParquetSchemaMergingEnabled) return None
+    val p = new Path(path)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val leaves: Seq[FileStatus] = try {
+      val st = fs.getFileStatus(p)
+      if (st.isFile) Seq(st) else fs.listStatus(p).toSeq.sortBy(_.getPath.toString)
+    } catch { case _: java.io.FileNotFoundException => return None }
+    def named(n: String) = leaves.find(_.getPath.getName == n)
+    def hidden(n: String) = n.startsWith("_") || n.startsWith(".") || n.endsWith("._COPYING_")
+    if (leaves.exists(_.isDirectory)) None
+    else named("_common_metadata").orElse(named("_metadata"))
+      .orElse(leaves.find(f => !hidden(f.getPath.getName)))
+      .map(graft.sources.LocalParquet.schema(s, _))
+  }
 
   def lineitem(s: SparkSession, d: String): DataFrame = apply(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame = apply(s, d, "orders")

@@ -68,6 +68,10 @@ import org.apache.spark.storage.StorageLevel
   *     `_change_type` column; a commit that changes no row leaves an
   *     empty typed relation instead.
   *
+  * Their jobs carry the step's name as job description and short call
+  * site (`upsert:fold`, `upsert:write`; `merge:` for MERGE), so an event
+  * log or the UI tells them apart inside a stream's trigger.
+  *
   * A parent deletion vector adds the resurrection probe, and a hashed
   * (string/binary) key adds the band aggregate over the new files.
   */
@@ -220,10 +224,12 @@ object UpsertSink {
         // emptiness, the key band (the owning-file split and the
         // disjoint-conflict fast path's overlap probe) and the null-key
         // check in one aggregate over the persisted keys
-        val r = allKeys.agg(count(lit(1)),
-          min(VersionedStore.keyLong(allKeys, keyCol)),
-          max(VersionedStore.keyLong(allKeys, keyCol)),
-          count(col(keyCol))).head()
+        val r = step(b.sparkSession, s"$operation:fold") {
+          allKeys.agg(count(lit(1)),
+            min(VersionedStore.keyLong(allKeys, keyCol)),
+            max(VersionedStore.keyLong(allKeys, keyCol)),
+            count(col(keyCol))).head()
+        }
         if (r.getLong(0) > r.getLong(3))
           throw new IllegalArgumentException(s"$operation batch for $path " +
             s"carries a null '$keyCol': a keyed store needs a key on every row")
@@ -237,6 +243,18 @@ object UpsertSink {
 
   /** The band of the batch's distinct keys in long space. */
   private case class BatchKeys(lo: Long, hi: Long)
+
+  /** Run `f` with `name` as the job description and short call site of
+    * the Spark jobs it starts, then restore the caller's (in a stream:
+    * the trigger's description and the stream's start call site). The
+    * long call site, the stack an execution records, stays as it was. */
+  private def step[A](s: SparkSession, name: String)(f: => A): A = {
+    val sc = s.sparkContext
+    val props = Seq("spark.job.description", "callSite.short")
+    val saved = props.map(sc.getLocalProperty)
+    props.foreach(sc.setLocalProperty(_, name))
+    try f finally props.zip(saved).foreach { case (k, v) => sc.setLocalProperty(k, v) }
+  }
 
   /** Run `f` over `ds` persisted, unpersisting it on every exit (return
     * or exception) — the one-evaluation rule above, for any sink that
@@ -288,9 +306,11 @@ object UpsertSink {
           if (owning.isEmpty) LocalParquet.empty(s, sch)
           else s.read.schema(sch).parquet(owning.toIndexedSeq: _*)
         }
-        writeCommit(s, commitRows(old, batch, keyCol, Option.when(drops)(allKeys), parentDv),
-          path, v, dataDir, keyCol,
-          math.max(1, if (owning.isEmpty) initialPartitions else owning.length))
+        step(s, s"$operation:write") {
+          writeCommit(s, commitRows(old, batch, keyCol, Option.when(drops)(allKeys), parentDv),
+            path, v, dataDir, keyCol,
+            math.max(1, if (owning.isEmpty) initialPartitions else owning.length))
+        }
         settled => {
           // the COW validity check: the staged version is only a correct
           // next version if the tip is STILL the parent it was computed

@@ -311,4 +311,33 @@ class UpsertTriggerSpec extends AnyFunSuite {
     assert(multiset(UpsertSink.readStore(spark, path).filter(col("amount") < 0)) ==
       Seq("[10,-10]", "[150,-150]", "[20,-20]", "[250,-250]", "[260,-260]"))
   }
+
+  test("the fold and the fused write carry their step names; the caller's " +
+      "description and call site come back") {
+    val path = tmp("steps")
+    UpsertSink.upsertBatch((0L until 300L).map(k => (k, k)).toDF("key", "amount"), path, 0L, "key")
+    val sc = spark.sparkContext
+    val named = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val l = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart => named.add(x.description)
+        case _ =>
+      }
+    }
+    sc.setJobDescription("caller")
+    sc.addSparkListener(l)
+    try {
+      UpsertSink.upsertBatch((0L until 50L).map(k => (k * 3, -k)).toDF("key", "amount"), path, 1L, "key")
+      ListenerBusBridge.drain(sc)
+      assert(sc.getLocalProperty("spark.job.description") == "caller")
+      assert(sc.getLocalProperty("callSite.short") == null)
+    } finally {
+      sc.removeSparkListener(l)
+      sc.setJobDescription(null)
+    }
+    import scala.jdk.CollectionConverters._
+    val (steps, others) = named.asScala.toSeq.partition(_.startsWith("upsert:"))
+    assert(steps == Seq("upsert:fold", "upsert:write"), named)
+    assert(others.forall(_ == "caller"), named)
+  }
 }
